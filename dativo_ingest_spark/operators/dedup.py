@@ -1082,11 +1082,15 @@ def _inline_key_filter(key_col: str, keys: list):
     roundtrip each, ~1 s of pure driver time at a few thousand keys (the
     r14 expression-builder lesson) — while a single SQL string parses in
     one call and reaches the data source as a pushable In/InSet filter.
+    Backslashes are escaped before quotes (Spark string literals treat
+    ``\\`` as an escape); ``None`` keys are dropped, as NULL never matches.
     """
+    keys = [k for k in keys if k is not None]
     if not keys:
         return F.lit(False)
     quoted = ",".join(
-        "'" + str(k).replace("'", "''") + "'" for k in keys)
+        "'" + str(k).replace("\\", "\\\\").replace("'", "''") + "'"
+        for k in keys)
     return F.expr(f"{key_col} IN ({quoted})")
 
 

@@ -13,7 +13,8 @@ schema_validator.py:58-172) on DataFrames:
   column cannot hold the original value, which the reference's dict rows
   could; this is the documented divergence), extra columns NOT in the
   contract are preserved (reference: schema_validator.py:114-123,167-170);
-- error summary capped at 100 (reference: schema_validator.py:293-301).
+- error summary capped at 100 (reference: schema_validator.py:293-301),
+  collected row-wise, never exploded: see ``ValidationResult.error_summary``.
 
 Everything is one Catalyst plan: the valid/invalid split is two filters over
 a shared projection, so at scale the source is scanned once per branch with
@@ -56,14 +57,15 @@ class ValidationResult:
     annotated: DataFrame | None = None
 
     def error_summary(self, cap: int = 100) -> list[dict]:
-        """First ``cap`` validation errors (reference caps at 100)."""
-        rows = (
-            self.invalid.select(F.explode(ERRORS_COL).alias("e"))
-            .select("e.*")
-            .limit(cap)
-            .collect()
-        )
-        return [r.asDict() for r in rows]
+        """First ``cap`` errors (reference caps at 100), row-then-field order.
+
+        Flattens the error arrays of the first ``cap`` invalid rows (each
+        holds >=1 error). An in-plan ``explode`` makes Catalyst's
+        ``InferFiltersFromGenerate`` cost ~2x per contract column: on 4
+        cores, 1.48 of 1.58 s rule time at 12 columns (OOM at 16) vs 0.08 s.
+        """
+        rows = self.invalid.select(ERRORS_COL).limit(cap).collect()
+        return [e.asDict() for r in rows for e in r[0]][:cap]
 
 
 def _field_error(df: DataFrame, f: Field) -> tuple[Column, Column]:
@@ -77,20 +79,17 @@ def _field_error(df: DataFrame, f: Field) -> tuple[Column, Column]:
         coerced = F.lit(None).cast(coercion.spark_type_for(f.type))
     err = F.when(
         raw.isNull() & F.lit(f.required),
-        F.struct(
-            F.lit(f.name).alias("field"),
-            F.lit("missing_required").alias("error"),
-            F.lit(None).cast("string").alias("value"),
-        ),
+        _error(f.name, "missing_required", F.lit(None).cast("string")),
     ).when(
         raw.isNotNull() & coerced.isNull(),
-        F.struct(
-            F.lit(f.name).alias("field"),
-            F.lit("type_mismatch").alias("error"),
-            raw.cast("string").alias("value"),
-        ),
+        _error(f.name, "type_mismatch", raw.cast("string")),
     )
     return coerced, err
+
+
+def _error(field: str, kind: str, value: Column) -> Column:
+    return F.struct(F.lit(field).alias("field"), F.lit(kind).alias("error"),
+                    value.alias("value"))
 
 
 def validate(

@@ -35,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from dativo_ingest_spark import catalog as catalog_mod
 from dativo_ingest_spark import infrastructure
@@ -935,8 +936,21 @@ def run_job(
             if not merge_keys:
                 raise ConfigError(
                     "target.options.mode=merge needs merge_keys")
+            updates = spark.read.parquet(stage)
+            cursor_field = job.source.incremental.cursor_field \
+                if job.source.incremental.enabled else None
+            if cursor_field and cursor_field in updates.columns:
+                # the >= re-read boundary row and a later update of the
+                # same key land in one batch: keep the newest version per
+                # key, since merge_upsert writes every update row verbatim
+                newest = Window.partitionBy(*merge_keys).orderBy(
+                    F.col(cursor_field).desc())
+                updates = (updates
+                           .withColumn("_dativo_rank",
+                                       F.row_number().over(newest))
+                           .filter("_dativo_rank = 1").drop("_dativo_rank"))
             table.merge_upsert(
-                spark, spark.read.parquet(stage), merge_keys,
+                spark, updates, merge_keys,
                 branch=branch,
                 stats_columns=sorted({*merge_keys, *pcols}),
                 properties=props,

@@ -122,3 +122,16 @@ def test_benchmark_contamination_broadcasts_bench_side(spark):
         corpus, bench, "doc_id", "text")._jdf.queryExecution()\
         .executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+
+
+def test_inline_key_filter_escapes_backslash_and_quote_drops_none(spark):
+    """Keys holding ``\\`` and ``'`` match literally; a ``None`` key matches
+    nothing (not the string ``'None'``, not a NULL row)."""
+    stored = ["a\\b", "a\b", "o'brien", "c\\'d", "plain", "None", None,
+              "other"]
+    frame = spark.createDataFrame([(k,) for k in stored], "_key string")
+    keys = ["a\\b", "o'brien", "c\\'d", "plain", None]
+    got = [r[0] for r in frame.filter(
+        dedup._inline_key_filter("_key", keys)).collect()]
+    assert sorted(got) == sorted(["a\\b", "o'brien", "c\\'d", "plain"])
+    assert frame.filter(dedup._inline_key_filter("_key", [None])).count() == 0

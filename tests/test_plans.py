@@ -1051,3 +1051,79 @@ def test_ivfpq_persistent_serve_plan(spark, tmp_path):
     assert len(t.matching_files(snap, [("cell", ">=", lone),
                                        ("cell", "<=", lone)])) \
         < len(snap.files)
+
+
+def test_error_sample_plan_has_no_generate(spark, tmp_path, monkeypatch):
+    """The validation error sample must not explode in the plan: a Generate
+    over the inlined per-field error expression makes the optimizer's
+    InferFiltersFromGenerate cost double with every contract column."""
+    from dativo_ingest_spark.config.contracts import AssetDefinition
+    from dativo_ingest_spark.sources import csv_source
+
+    (tmp_path / "e.csv").write_text("id,when\nx,2020-01-01\n2,never\n")
+    asset = AssetDefinition.from_dict({"name": "e", "version": "1", "schema": [
+        {"name": "id", "type": "integer", "required": True},
+        {"name": "when", "type": "date"}]})
+    res = csv_source.extract(spark, str(tmp_path / "e.csv"), asset,
+                             mode="warn")
+    frames = []
+    orig = type(res.invalid).collect
+
+    def spy(self):
+        frames.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(type(res.invalid), "collect", spy)
+    sample = res.error_summary()
+    assert [e["value"] for e in sample] == ["x", "never"]
+    assert frames
+    for frame in frames:
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert "Generate" not in plan, plan[:800]
+
+
+def test_error_sample_wide_contract_plans_in_bounded_time(spark, tmp_path):
+    """Per-column blow-up guard: a 24-field typed contract over an all-string
+    CSV with malformed cells in several columns. Planning an exploded
+    sample grows ~2x per contract column (33 s and a heap exhaustion at 16
+    columns), which a 12-column benchmark drop cannot show; the sample
+    must come back well inside a generous wall bound. The call runs in a
+    daemon thread so a regression fails here instead of hanging the run."""
+    import threading
+    import time
+
+    from dativo_ingest_spark.config.contracts import AssetDefinition
+    from dativo_ingest_spark.sources import csv_source
+
+    kinds = ["integer", "float", "timestamp", "boolean", "date", "string"]
+    fields = [{"name": f"c{i:02d}", "type": kinds[i % len(kinds)],
+               "required": i % 5 == 0} for i in range(24)]
+    good = {"integer": "7", "float": "1.5", "boolean": "true",
+            "timestamp": "2020-01-01 00:00:00", "date": "2020-01-01",
+            "string": "s"}
+    lines = [",".join(f["name"] for f in fields)]
+    for r in range(10):
+        cells = [good[f["type"]] for f in fields]
+        for j in (r % 24, (r * 7 + 3) % 24, (r * 11 + 5) % 24):
+            # malformed for every typed kind; blank (NULL) for strings
+            cells[j] = "" if fields[j]["type"] == "string" else f"bad{r}"
+        lines.append(",".join(cells))
+    (tmp_path / "wide.csv").write_text("\n".join(lines) + "\n")
+    asset = AssetDefinition.from_dict(
+        {"name": "wide", "version": "1", "schema": fields})
+    res = csv_source.extract(spark, str(tmp_path / "wide.csv"), asset,
+                             mode="warn")
+    out: dict = {}
+
+    def call():
+        out["sample"] = res.error_summary()
+
+    t0 = time.perf_counter()
+    worker = threading.Thread(target=call, daemon=True)
+    worker.start()
+    worker.join(timeout=10.0)
+    assert not worker.is_alive(), (
+        f"error_summary() still running after "
+        f"{time.perf_counter() - t0:.0f} s")
+    assert out["sample"] and all(
+        set(e) == {"field", "error", "value"} for e in out["sample"])

@@ -482,6 +482,41 @@ def test_table_commit_merge_mode_is_idempotent_upsert(spark, tmp_path):
     assert got == {1: "alice", 2: "robert", 3: "carol"}
 
 
+def test_table_commit_merge_mode_keeps_newest_boundary_version(
+        spark, tmp_path):
+    """The >= cursor re-reads the previous batch's boundary row; when the
+    next delta updates that same key, the batch holds two versions of it.
+    The merge must keep only the newest (by cursor), one row per key."""
+    from dativo_ingest_spark.sinks.table_commit import FsTable
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "t")
+    state = str(tmp_path / "state")
+    d = job_dict(src, out, incremental={"enabled": True,
+                                        "cursor_field": "cursor"})
+    d["source"]["type"] = "parquet"
+    d["target"]["options"] = {"mode": "merge", "commit": "table",
+                              "merge_keys": "id"}
+    d["asset"]["schema"] = [
+        {"name": "id", "type": "integer", "required": True},
+        {"name": "name", "type": "string", "required": True},
+        {"name": "cursor", "type": "integer", "required": True},
+    ]
+    job = JobConfig.from_dict(d)
+    schema = "id bigint, name string, cursor bigint"
+    spark.createDataFrame([(1, "alice", 10), (2, "bob", 20)], schema)\
+        .write.parquet(src)
+    assert runner.run_job(spark, job, state_root=state).exit_code == 0
+    # second delta updates key 2, the first delta's boundary row (cursor 20)
+    spark.createDataFrame([(2, "robert", 30), (3, "carol", 25)], schema)\
+        .write.mode("append").parquet(src)
+    r2 = runner.run_job(spark, job, state_root=state)
+    assert r2.exit_code == 0 and r2.records_in == 3  # boundary re-read
+    rows = FsTable(out).read(spark, branch="acme").collect()
+    assert len(rows) == 3
+    assert {r["id"]: (r["name"], r["cursor"]) for r in rows} == {
+        1: ("alice", 10), 2: ("robert", 30), 3: ("carol", 25)}
+
+
 def test_table_commit_merge_mode_requires_keys(spark, tmp_path):
     src = tmp_path / "p.csv"
     src.write_text("id,name,active\n1,a,true\n")

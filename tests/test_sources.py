@@ -55,6 +55,36 @@ def test_csv_extract_validation_split(spark, csv_dir):
     assert res.invalid.count() == 2
 
 
+def test_error_summary_caps_in_row_then_field_order(spark, tmp_path):
+    """Rows carrying several errors each: the sample is exactly ``cap``
+    field/error/value dicts in row order, then contract-field order within
+    a row, and warn and strict mode sample the same errors."""
+    (tmp_path / "m.csv").write_text(
+        "id,name,active,hired\n"
+        "x1,,maybe,notadate\n"
+        "1,alice,true,2020-01-01\n"
+        ",bob,perhaps,\n"
+        "y2,,true,\n")
+    want = [
+        {"field": "id", "error": "type_mismatch", "value": "x1"},
+        {"field": "name", "error": "missing_required", "value": None},
+        {"field": "active", "error": "type_mismatch", "value": "maybe"},
+        {"field": "hired", "error": "type_mismatch", "value": "notadate"},
+        {"field": "id", "error": "missing_required", "value": None},
+        {"field": "active", "error": "type_mismatch", "value": "perhaps"},
+        {"field": "id", "error": "type_mismatch", "value": "y2"},
+        {"field": "name", "error": "missing_required", "value": None},
+    ]
+    samples = {}
+    for mode in ("strict", "warn"):
+        res = csv_source.extract(spark, str(tmp_path / "m.csv"), ASSET,
+                                 mode=mode)
+        samples[mode] = res.error_summary(cap=5)
+        assert res.error_summary() == want   # cap above the error total
+    assert samples["strict"] == want[:5]
+    assert samples["warn"] == samples["strict"]
+
+
 def test_csv_mtime_skip(spark, csv_dir, tmp_path):
     pattern = str(csv_dir / "*.csv")
     listing = dict(csv_source.list_csv_files(pattern))
