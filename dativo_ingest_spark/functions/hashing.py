@@ -6,14 +6,13 @@ oracle-checkable. Hash *ordering* uses the hex-string values directly
 (fixed-width lowercase hex compares lexicographically the same everywhere),
 avoiding engine-specific hex→int conversions.
 
-MinHash scheme (standard broder-style minwise hashing; public algorithm):
-  h_s(x) = md5(s || '|' || x)            -- s = seed index, x = shingle
-  sig[s] = min over shingles of h_s(x)   -- lexicographic min of hex strings
-  band b = md5(concat(sig[b*r .. b*r+r-1]))  -- LSH banding, r rows/band
-Docs sharing any (b, band_hash) are candidate pairs; candidates are then
-verified with exact n-gram Jaccard. At 100 TB this is the classic
-shuffle-light pipeline: explode bands → shuffle by band key → pair join
-within small buckets only.
+* :func:`content_fingerprint` — the exact-dup key.
+* :func:`chunked_gram_hashes` — ``num_hashes`` 32-bit minwise hash values
+  per shingle as 8-hex-char chunks; ``operators/dedup.py`` takes the
+  per-chunk min over a doc's shingles as its MinHash signature and bands
+  it into ``'b|slice|..'`` LSH keys (``_sig_from_grams`` /
+  ``_band_key_cols``), and ``operators/sketches.py`` reuses the chunks.
+* :func:`hamming_distance` — SimHash bitstring distance.
 """
 
 from __future__ import annotations
@@ -27,29 +26,6 @@ from dativo_ingest_spark.functions.text import normalize_ws
 def content_fingerprint(col: Column) -> Column:
     """md5 of whitespace-normalized lowercase text (exact-dup key)."""
     return F.md5(normalize_ws(col))
-
-
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """array<string> of ``num_hashes`` minwise md5-hex values (per-row HOF
-    form; prefer :func:`chunked_gram_hashes` + groupBy(min) on exploded
-    shingles for large corpora — the 8 transformed md5-string arrays this
-    allocates per doc are measurable GC pressure at scale).
-
-    Empty shingle sets produce ``md5(seed + '|')``-free sentinel: the min of
-    an empty transformed array is NULL; callers should filter empty docs
-    first (array_min of empty array is NULL in both Spark and DuckDB, so
-    parity holds either way).
-    """
-    sigs = [
-        F.array_min(
-            F.transform(
-                shingles,
-                lambda x, s=s: F.md5(F.concat_ws("|", F.lit(str(s)), x)),
-            )
-        )
-        for s in range(num_hashes)
-    ]
-    return F.array(*sigs)
 
 
 def chunked_gram_hashes(col: Column, num_hashes: int) -> Column:
@@ -69,68 +45,6 @@ def chunked_gram_hashes(col: Column, num_hashes: int) -> Column:
         for i in range(n_md5)
     ]
     return parts[0] if n_md5 == 1 else F.concat(*parts)
-
-
-def lsh_band_hashes(signature: Column, num_hashes: int, rows_per_band: int) -> Column:
-    """array<struct<band:int, bucket:string>> LSH band keys for a signature."""
-    assert num_hashes % rows_per_band == 0
-    bands = []
-    for b in range(num_hashes // rows_per_band):
-        parts = [
-            F.element_at(signature, b * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *parts)).alias("bucket"),
-            )
-        )
-    return F.array(*bands)
-
-
-def token_md5s(words_col: Column) -> Column:
-    """array<string> md5 per distinct token (materialize through a
-    projection boundary before feeding simhash — no CSE in lambdas)."""
-    return F.transform(F.array_distinct(words_col), lambda w: F.md5(w))
-
-
-def simhash_bitstring(md5s: Column, bits: int = 32) -> Column:
-    """Engine-portable SimHash: '0'/'1' bitstring of length ``bits``.
-
-    Bit ``b`` of a token = bit ``b % 4`` of the hex nibble at md5 position
-    ``b // 4`` — decoded with pure arithmetic (conv/strpos + div + mod), so
-    any engine with md5 reproduces it bit-identically. Votes (+1/-1) are
-    summed across tokens in ONE pass: the accumulator is an int array
-    combined per-token with ``zip_with`` (vs. the naive one-aggregate-per-
-    bit form, which re-scans the token array ``bits`` times).
-
-    Empty token sets produce the all-zero string — filter empty docs before
-    pairing or every pair of them collides.
-    """
-    nibble_div = F.array(*[F.lit(1 << k) for k in range(4)])
-
-    def token_bits(h: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(bits - 1)),
-            lambda b: F.when(
-                (
-                    F.conv(F.substring(h, (b / 4).cast("int") + 1, 1), 16, 10)
-                    .cast("int")
-                    / F.element_at(nibble_div, (b % 4) + 1)
-                ).cast("int") % 2 == 1,
-                F.lit(1),
-            ).otherwise(F.lit(-1)),
-        )
-
-    sums = F.aggregate(
-        md5s,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, token_bits(h), lambda x, y: x + y),
-    )
-    return F.array_join(
-        F.transform(sums, lambda s: F.when(s > 0, "1").otherwise("0")), ""
-    )
 
 
 def hamming_distance(a: Column, b: Column, bits: int) -> Column:

@@ -785,16 +785,13 @@ def dedup_embeddings_against_index(
         # while coalescing the cached kept rows first runs the chain
         # once per output file. Per-task encode work stays bounded by
         # INDEX_APPEND_ROWS_PER_FILE entry rows.
+        from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
+
         src = kept.coalesce(index_append_partitions(n_kept * bands))
-        if index_codec == "pq":
-            entries = index_entries_pq(src, id_col, vec_col, codebooks,
-                                       bands, band_width, scale)
-        elif index_codec == "pq_residual":
-            entries = index_entries_pq_residual(
-                src, id_col, vec_col, artifact, bands, band_width)
-        else:
-            entries = index_entries(src, id_col, vec_col, bands,
-                                    band_width)
+        entries = IngestDedup("embedding", id_col, vec_col, {
+            "bands": bands, "band_width": band_width,
+            "index_codec": index_codec, "codebooks": codebooks,
+            "scale": scale, "artifact": artifact}).index_entries(src)
         index_table.write_append(entries, branch=branch)
     staged.unpersist()
     return kept, n_batch_dups, n_index_dups

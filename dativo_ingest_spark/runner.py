@@ -125,26 +125,20 @@ def _extract(spark: SparkSession, job: JobConfig,
     inc = src.incremental
     key = _state_key(job)
 
-    if src.type == "csv":
-        seen = None
-        if store is not None and inc.enabled and \
-                inc.strategy == "file_modified_time":
-            seen = store.get_file_mtimes(key)
+    # file-family sources skip files whose mtime the state already holds
+    seen = None
+    if src.type in ("csv", "jsonl", "markdown_kv") and store is not None \
+            and inc.enabled and inc.strategy == "file_modified_time":
+        seen = store.get_file_mtimes(key)
+
+    if src.type in ("csv", "jsonl"):
         files = csv_source.changed_files(src.path, seen, inc.lookback_days)
         if not files:
             return None
-        return csv_source.read_csv(spark, files, job.asset, src.options)
-
-    if src.type == "jsonl":
+        if src.type == "csv":
+            return csv_source.read_csv(spark, files, job.asset, src.options)
         from dativo_ingest_spark.sources import jsonl_source
 
-        seen = None
-        if store is not None and inc.enabled and \
-                inc.strategy == "file_modified_time":
-            seen = store.get_file_mtimes(key)
-        files = csv_source.changed_files(src.path, seen, inc.lookback_days)
-        if not files:
-            return None
         return jsonl_source.read_jsonl(spark, files, job.asset, src.options)
 
     if src.type == "parquet":
@@ -161,10 +155,6 @@ def _extract(spark: SparkSession, job: JobConfig,
         return df
 
     if src.type == "markdown_kv":
-        seen = None
-        if store is not None and inc.enabled and \
-                inc.strategy == "file_modified_time":
-            seen = store.get_file_mtimes(key)
         storage, ext = mdkv_source.resolve_storage(src.options)
         return mdkv_source.extract(spark, src.path, storage=storage,
                                    seen=seen, file_extension=ext)
@@ -279,10 +269,14 @@ def run_job(
     # rollup folds only exist on the snapshot-commit path, and its
     # anti-double-count watermark needs a cursor to key on; dynamic
     # partition overwrite is a hive-publish operation.
-    _wm = str(job.target.options.get("mode", "append"))
-    _cm = str(job.target.options.get("commit", "hive"))
-    if _wm == "rollup":
-        if _cm != "table":
+    write_mode = str(job.target.options.get("mode", "append"))
+    commit_mode = str(job.target.options.get("commit", "hive"))
+    if commit_mode not in ("hive", "table", "iceberg"):
+        raise ConfigError(
+            "target.options.commit must be hive, table or iceberg, got "
+            f"{commit_mode!r}")
+    if write_mode == "rollup":
+        if commit_mode != "table":
             raise ConfigError(
                 "target.options.mode=rollup requires commit: table "
                 "(the snapshot-commit sink holds the rollup state)")
@@ -294,8 +288,8 @@ def run_job(
                 "replays and >= boundary re-reads idempotent is keyed on "
                 "the cursor (file-mtime re-extraction would double-fold "
                 "additive state)")
-    if _wm == "scd2":
-        if _cm != "table":
+    if write_mode == "scd2":
+        if commit_mode != "table":
             raise ConfigError(
                 "target.options.mode=scd2 requires commit: table (the "
                 "snapshot-commit sink holds the dimension history)")
@@ -307,15 +301,15 @@ def run_job(
                 "scd2.ts_field must not appear in scd2.keys or "
                 "scd2.tracked (it becomes the version interval boundary, "
                 "not an attribute)")
-    if _wm == "overwrite_partitions" and _cm != "hive":
+    if write_mode == "overwrite_partitions" and commit_mode != "hive":
         raise ConfigError(
             "target.options.mode=overwrite_partitions is a hive-publish "
             "operation; the snapshot sinks express it as an overwrite "
             "commit instead")
-    if _wm == "shard_export":
+    if write_mode == "shard_export":
         # trainer-facing deterministic shard layout (sinks/shard_export):
         # validated before any data moves, like every other target option
-        if _cm != "hive":
+        if commit_mode != "hive":
             raise ConfigError(
                 "target.options.mode=shard_export publishes a hive "
                 "shard=K layout (commit: hive)")
@@ -348,100 +342,23 @@ def run_job(
                 raise ConfigError(
                     "shard.mixture: n_rounds and eta_milli must be "
                     ">= 0")
-    # dedup-on-ingest config (operators/dedup.py:dedup_against_index /
-    # operators/similarity.py:dedup_embeddings_against_index): validated
+    # dedup-on-ingest config (operators/ingest_dedup.py): validated
     # before any data moves, like every other target option.
-    _dd = job.target.options.get("dedup")
-    if _dd is not None:
-        _dd = dict(_dd)
-        if not (_dd.get("index") and _dd.get("id_field")
-                and _dd.get("content_field")):
-            raise ConfigError(
-                "target.options.dedup needs index (the dedup-index table "
-                "path), id_field and content_field")
-        _dd["mode"] = str(_dd.get("mode", "exact"))
-        if _dd["mode"] not in ("exact", "embedding", "minhash"):
-            raise ConfigError(
-                "target.options.dedup.mode must be exact, embedding or "
-                f"minhash, got {_dd['mode']!r}")
-        if _dd["mode"] in ("embedding", "minhash"):
-            _thr = float(_dd.get(
-                "threshold", 0.95 if _dd["mode"] == "embedding" else 0.5))
-            if not (0.0 < _thr <= 1.0):
-                raise ConfigError(
-                    "target.options.dedup.threshold must be in (0, 1], "
-                    f"got {_thr}")
-        if _dd["mode"] == "minhash":
-            _nh = int(_dd.get("num_hashes", 8))
-            _rpb = int(_dd.get("rows_per_band", 2))
-            if _rpb < 1 or _nh % _rpb != 0:
-                raise ConfigError(
-                    "target.options.dedup.rows_per_band must divide "
-                    f"num_hashes (got {_rpb} / {_nh})")
-        # PQ-coded embedding index (r12): codebooks ship as a JSON
-        # artifact (the classifier-model pattern) since a trained
-        # m x k x sub float tensor cannot ride YAML
-        _dd["index_codec"] = str(_dd.get("index_codec", "raw"))
-        if _dd["index_codec"] not in ("raw", "pq", "pq_residual"):
-            raise ConfigError(
-                "target.options.dedup.index_codec must be raw, pq or "
-                f"pq_residual, got {_dd['index_codec']!r}")
-        if _dd["index_codec"] in ("pq", "pq_residual"):
-            if _dd["mode"] != "embedding":
-                raise ConfigError(
-                    f"target.options.dedup.index_codec="
-                    f"{_dd['index_codec']} applies only to "
-                    "mode=embedding")
-            _cb_path = _dd.get("codebooks")
-            if not _cb_path:
-                raise ConfigError(
-                    f"target.options.dedup.index_codec="
-                    f"{_dd['index_codec']} needs codebooks (path to a "
-                    "JSON artifact: quantization.pq_train output under "
-                    "key 'codebooks' for pq, the full "
-                    "quantization.ivfpq_train_artifact dict for "
-                    "pq_residual)")
-            import json as _json
-            try:
-                with open(str(_cb_path)) as _fh:
-                    _cb = _json.load(_fh)
-            except (OSError, ValueError) as exc:
-                raise ConfigError(
-                    f"target.options.dedup.codebooks: cannot load "
-                    f"{_cb_path!r}: {exc}") from exc
-            _cb_t = _cb.get("codebooks") if isinstance(_cb, dict) else _cb
-            if (not isinstance(_cb_t, list) or not _cb_t
-                    or not isinstance(_cb_t[0], list) or not _cb_t[0]
-                    or not isinstance(_cb_t[0][0], list)):
-                raise ConfigError(
-                    "target.options.dedup.codebooks artifact must hold "
-                    "an m x k x sub nested list (optionally under key "
-                    "'codebooks')")
-            _dd["_codebooks"] = _cb_t
-            _dd["_pq_scale"] = int(
-                (_cb.get("scale") if isinstance(_cb, dict) else None)
-                or 10_000)
-            if _dd["index_codec"] == "pq_residual":
-                # the residual codec needs the coarse cells too — the
-                # artifact is the whole ivfpq_train_artifact dict
-                if not (isinstance(_cb, dict)
-                        and isinstance(_cb.get("cells"), list)
-                        and _cb["cells"]):
-                    raise ConfigError(
-                        "target.options.dedup.index_codec=pq_residual "
-                        "needs the codebooks artifact to be the FULL "
-                        "quantization.ivfpq_train_artifact dict "
-                        "(keys cells + codebooks + scale)")
-                _dd["_artifact"] = _cb
-        if _wm in ("overwrite", "overwrite_partitions"):
+    dedup_conf = None
+    if job.target.options.get("dedup") is not None:
+        from dativo_ingest_spark.operators import ingest_dedup
+
+        dedup_index_path, dedup_conf = ingest_dedup.from_options(
+            job.target.options["dedup"])
+        if write_mode in ("overwrite", "overwrite_partitions"):
             raise ConfigError(
                 "target.options.dedup cannot combine with mode="
-                f"{_wm}: the dedup index is append-only corpus memory, "
+                f"{write_mode}: the dedup index is append-only corpus memory, "
                 "so overwriting the corpus would leave the index "
                 "remembering content the table no longer holds (and "
                 "silently dropping its legitimate re-ingestion)")
         _id_field_def = next(
-            (f for f in job.asset.fields if f.name == _dd["id_field"]),
+            (f for f in job.asset.fields if f.name == dedup_conf.id_col),
             None)
         if _id_field_def is None or not _id_field_def.required:
             raise ConfigError(
@@ -515,49 +432,16 @@ def run_job(
     dedup_index_table = None
     dedup_kept = None
     pre_dedup_df = None
-    if _dd is not None:
+    if dedup_conf is not None:
         pre_dedup_df = df
-        for c in (_dd["id_field"], _dd["content_field"]):
+        for c in (dedup_conf.id_col, dedup_conf.content_col):
             if c not in df.columns:
                 raise ConfigError(
                     f"target.options.dedup field {c!r} not in the "
                     f"extracted columns {sorted(df.columns)}")
-        dedup_index_table = table_commit.FsTable.create(str(_dd["index"]))
-        if _dd["mode"] == "embedding":
-            from dativo_ingest_spark.operators import (
-                similarity as similarity_mod)
-
-            kept, n_b, n_i = similarity_mod.dedup_embeddings_against_index(
-                spark, df, _dd["id_field"], _dd["content_field"],
-                dedup_index_table,
-                threshold=float(_dd.get("threshold", 0.95)),
-                bands=int(_dd.get("bands", 4)),
-                band_width=int(_dd.get("band_width", 8)),
-                commit=False,
-                index_codec=_dd.get("index_codec", "raw"),
-                codebooks=_dd.get("_codebooks"),
-                scale=int(_dd.get("_pq_scale", 10_000)),
-                artifact=_dd.get("_artifact"),
-            )
-        elif _dd["mode"] == "minhash":
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            kept, n_b, n_i = dedup_mod.dedup_minhash_against_index(
-                spark, df, _dd["id_field"], _dd["content_field"],
-                dedup_index_table,
-                n=int(_dd.get("ngram", 3)),
-                num_hashes=int(_dd.get("num_hashes", 8)),
-                rows_per_band=int(_dd.get("rows_per_band", 2)),
-                threshold=float(_dd.get("threshold", 0.5)),
-                commit=False,
-            )
-        else:
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            kept, n_b, n_i = dedup_mod.dedup_against_index(
-                spark, df, _dd["id_field"], _dd["content_field"],
-                dedup_index_table, commit=False,
-            )
+        dedup_index_table = table_commit.FsTable.create(dedup_index_path)
+        kept, n_b, n_i = dedup_conf.against_index(
+            spark, df, dedup_index_table)
         dedup_dropped = {"batch": int(n_b), "index": int(n_i)}
         df = dedup_kept = kept
         _cleanup.append(kept)
@@ -666,7 +550,7 @@ def run_job(
     # success); abort fails BEFORE staging, like strict DQ.
     drift_report: dict = {}
     if _dg:
-        import math as _math
+        from dativo_ingest_spark.operators import drift
 
         if _dg["column"] not in probe.columns:
             raise ConfigError(
@@ -674,10 +558,8 @@ def run_job(
                 "is not a validated asset column")
         _ref_file = os.path.join(_dg["reference_path"],
                                  "drift_reference.json")
-        from dativo_ingest_spark.streaming.pipeline import psi_reference
-
         if not os.path.exists(_ref_file):
-            _edges, _counts = psi_reference(
+            _edges, _counts = drift.drift_reference(
                 probe, _dg["column"], n_bins=_dg["n_bins"])
             os.makedirs(_dg["reference_path"], exist_ok=True)
             with open(_ref_file, "w") as _fh:
@@ -687,31 +569,14 @@ def run_job(
         else:
             with open(_ref_file) as _fh:
                 _ref = json.load(_fh)
-            from dativo_ingest_spark.operators.quality import (
-                apply_equi_depth_bins)
-
-            _edges, _counts = _ref["edges"], _ref["counts"]
-            _k = len(_edges) + 1
-            _cur = [0] * _k
-            for _r in (apply_equi_depth_bins(
-                    probe, _dg["column"], _edges)
-                    .filter(F.col("bin").isNotNull())
-                    .groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-                    .collect()):
-                _cur[int(_r.bin)] = int(_r.n)
-            _tr, _tc = sum(_counts), sum(_cur)
-            if _dg["method"] == "ks" and _tc > 0 and _tr > 0:
+            _counts = _ref["counts"]
+            _cur = drift.bin_counts(probe, _dg["column"], _ref["edges"])
+            _n_cur = sum(_cur)
+            if _dg["method"] == "ks" and _n_cur > 0 and sum(_counts) > 0:
                 # two-sample KS on the shared bin grid: max ECDF gap,
                 # calibrated threshold — the distribution-free
                 # alternative to PSI's 0.25 rule of thumb
-                _cr = _cc = 0
-                _d = 0.0
-                for _i in range(_k - 1):
-                    _cr += _counts[_i]
-                    _cc += _cur[_i]
-                    _d = max(_d, abs(_cr / _tr - _cc / _tc))
-                _crit = (_dg["c_milli"] / 1000.0) * _math.sqrt(
-                    (_tr + _tc) / (_tr * _tc))
+                _d, _crit = drift.ks_score(_counts, _cur, _dg["c_milli"])
                 drift_report = {
                     "method": "ks",
                     "d_stat_micro": int(_d * 1e6),
@@ -720,12 +585,7 @@ def run_job(
                     "bins": _cur, "reference": _counts,
                 }
             else:
-                _psi = sum(
-                    ((_counts[_i] + 1) / (_tr + _k)
-                     - (_cur[_i] + 1) / (_tc + _k))
-                    * _math.log(((_counts[_i] + 1) / (_tr + _k))
-                                / ((_cur[_i] + 1) / (_tc + _k)))
-                    for _i in range(_k))
+                _psi = drift.psi_score(_counts, _cur)
                 drift_report = {
                     "method": "psi",
                     "psi_milli": int(_psi * 1000),
@@ -741,8 +601,8 @@ def run_job(
                     # total is the best pre-staging row figure
                     return _finish(JobResult(
                         exit_code=EXIT_FAILURE,
-                        records_in=_tc,
-                        records_valid=_tc,
+                        records_in=_n_cur,
+                        records_valid=_n_cur,
                         dq_report=dq_report,
                         drift_report=drift_report,
                         duration_s=time.perf_counter() - t0,
@@ -781,41 +641,34 @@ def run_job(
         ).drop("_zkey")
 
     out_path = job.target.path
-    write_mode = str(job.target.options.get("mode", "append"))
-    commit_mode = str(job.target.options.get("commit", "hive"))
     table = None
-    if commit_mode == "iceberg":
-        # Real-Iceberg path (jar-present deployments): validate the catalog
-        # config BEFORE any data is staged (fail-at-startup, exit 2), stage
-        # to a scratch dir so strict mode can still abort pre-commit, then
-        # hand the staged rows to the native writeTo() snapshot commit.
-        from dativo_ingest_spark.sinks import iceberg_sink
+    if commit_mode in ("iceberg", "table"):
+        if commit_mode == "iceberg":
+            # Real-Iceberg path (jar-present deployments): validate the
+            # catalog config BEFORE any data is staged (fail-at-startup,
+            # exit 2), stage to a scratch dir so strict mode can still
+            # abort pre-commit, then hand the staged rows to the native
+            # writeTo() snapshot commit.
+            from dativo_ingest_spark.sinks import iceberg_sink
 
-        iceberg_sink.require_available(spark, job.target.table)
-        if out_path:
-            stage = os.path.join(out_path, "_staging", uuid.uuid4().hex)
+            iceberg_sink.require_available(spark, job.target.table)
+            if out_path:
+                stage = os.path.join(out_path, "_staging",
+                                     uuid.uuid4().hex)
+            else:
+                import tempfile
+
+                stage = tempfile.mkdtemp(prefix="dativo_iceberg_stage_")
         else:
-            import tempfile
-
-            stage = tempfile.mkdtemp(prefix="dativo_iceberg_stage_")
-        staged_df, pcols = parquet_sink.with_partition_columns(
-            to_write, job.target.partition_by)
-        probe_staged, _ = parquet_sink.with_partition_columns(
-            probe, job.target.partition_by)
-        parquet_sink.write_partitioned(
-            staged_df, stage, [],
-            target_file_size_mb=job.target.target_file_size_mb,
-            mode="overwrite", probe_df=probe_staged,
-        )
-    elif commit_mode == "table":
-        # Snapshot-commit sink: staged files are invisible until the
-        # manifest lands, so strict-mode abort and crash-at-any-point both
-        # leave the table exactly as it was (no rename loop, no delete
-        # window). Partition values ride as sanitized ``_p_*`` DATA columns
-        # (Iceberg-style: values in table metadata/files, not dir names).
-        table = table_commit.FsTable.create(out_path)
-        stage_rel = table.new_stage()
-        stage = os.path.join(out_path, stage_rel)
+            # Snapshot-commit sink: staged files are invisible until the
+            # manifest lands, so strict-mode abort and crash-at-any-point
+            # both leave the table exactly as it was (no rename loop, no
+            # delete window). Partition values ride as sanitized ``_p_*``
+            # DATA columns (Iceberg-style: values in table metadata/files,
+            # not dir names).
+            table = table_commit.FsTable.create(out_path)
+            stage_rel = table.new_stage()
+            stage = os.path.join(out_path, stage_rel)
         staged_df, pcols = parquet_sink.with_partition_columns(
             to_write, job.target.partition_by)
         probe_staged, _ = parquet_sink.with_partition_columns(
@@ -926,6 +779,8 @@ def run_job(
         branch = job.target.branch or "main"
         if branch != "main" and table.current_version(branch) is None:
             table.create_branch(branch)
+        # the merge and rollup folds key their >= re-read handling on it
+        cursor_field = inc.cursor_field if inc.enabled else None
         if write_mode == "merge":
             # idempotent upsert for the >= cursor re-read: the staged batch
             # merges by key through the copy-on-write path (manifest-stats
@@ -937,8 +792,6 @@ def run_job(
                 raise ConfigError(
                     "target.options.mode=merge needs merge_keys")
             updates = spark.read.parquet(stage)
-            cursor_field = job.source.incremental.cursor_field \
-                if job.source.incremental.enabled else None
             if cursor_field and cursor_field in updates.columns:
                 # the >= re-read boundary row and a later update of the
                 # same key land in one batch: keep the newest version per
@@ -996,8 +849,6 @@ def run_job(
             # identity-based replay detection; give such sources a unique
             # id column).
             rprops = dict(props)
-            cursor_field = job.source.incremental.cursor_field \
-                if job.source.incremental.enabled else None
             if cursor_field and cursor_field in batch.columns:
                 wm_key = f"rollup.cursor.{cursor_field}"
                 bd_key = f"rollup.cursor_rows.{cursor_field}"
@@ -1156,8 +1007,8 @@ def run_job(
             # (id_field is a required contract column, so a published
             # row's id is never NULL and the semi-join cannot miss it)
             published = dedup_kept.join(
-                probe.select(_dd["id_field"]).distinct(),
-                _dd["id_field"], "left_semi")
+                probe.select(dedup_conf.id_col).distinct(),
+                dedup_conf.id_col, "left_semi")
         else:
             # warn mode publishes every row — index them all directly
             # (a coerced-NULL id would silently fall out of a semi-join)
@@ -1175,49 +1026,9 @@ def run_job(
         # post-dedup row count is a free upper bound on published rows
         # (the target only sizes the file count, so an extra count() job
         # over the semi-join would be pure waste).
-        _entry_mult = (int(_dd.get("bands", 4))
-                       if _dd["mode"] == "embedding"
-                       else (int(_dd.get("num_hashes", 8))
-                             // int(_dd.get("rows_per_band", 2))
-                             if _dd["mode"] == "minhash" else 1))
-        published = published.coalesce(
-            index_append_partitions(n_rows * _entry_mult))
-        if _dd["mode"] == "embedding":
-            from dativo_ingest_spark.operators import (
-                similarity as similarity_mod)
-
-            if _dd.get("index_codec") == "pq":
-                entries = similarity_mod.index_entries_pq(
-                    published, _dd["id_field"], _dd["content_field"],
-                    _dd["_codebooks"],
-                    bands=int(_dd.get("bands", 4)),
-                    band_width=int(_dd.get("band_width", 8)),
-                    scale=int(_dd.get("_pq_scale", 10_000)))
-            elif _dd.get("index_codec") == "pq_residual":
-                entries = similarity_mod.index_entries_pq_residual(
-                    published, _dd["id_field"], _dd["content_field"],
-                    _dd["_artifact"],
-                    bands=int(_dd.get("bands", 4)),
-                    band_width=int(_dd.get("band_width", 8)))
-            else:
-                entries = similarity_mod.index_entries(
-                    published, _dd["id_field"], _dd["content_field"],
-                    bands=int(_dd.get("bands", 4)),
-                    band_width=int(_dd.get("band_width", 8)))
-        elif _dd["mode"] == "minhash":
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            entries = dedup_mod.index_entries_minhash(
-                published, _dd["id_field"], _dd["content_field"],
-                n=int(_dd.get("ngram", 3)),
-                num_hashes=int(_dd.get("num_hashes", 8)),
-                rows_per_band=int(_dd.get("rows_per_band", 2)))
-        else:
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            entries = dedup_mod.index_entries(
-                published, _dd["content_field"])
-        dedup_index_table.write_append(entries)
+        published = published.coalesce(index_append_partitions(
+            n_rows * dedup_conf.entries_per_row()))
+        dedup_index_table.write_append(dedup_conf.index_entries(published))
 
     # informational warn-mode sample: capped scan, only when errors exist
     sample = result.error_summary() if (invalid_count and result) else []
@@ -1254,8 +1065,8 @@ def run_job(
                         pre_dedup_df.schema[cursor].dataType)
                 dropped_max = (
                     pre_dedup_df
-                    .join(dedup_kept.select(_dd["id_field"]).distinct(),
-                          _dd["id_field"], "left_anti")
+                    .join(dedup_kept.select(dedup_conf.id_col).distinct(),
+                          dedup_conf.id_col, "left_anti")
                     .agg(F.max(raw_cursor).alias("m")).first()["m"])
                 try:
                     if dropped_max is not None and (

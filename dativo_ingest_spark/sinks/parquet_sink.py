@@ -16,11 +16,6 @@ Spark-first re-expression:
   sample-write trick — files roll over at the target size with **no extra
   shuffle**, which is the property that matters at 100 TB (the naive
   ``repartition(n)`` alternative is a full shuffle of the entire write).
-* an optional single ``repartition(partition_cols)`` pre-shuffle co-locates
-  rows of one partition value into one task, avoiding the
-  (#tasks × #partition-values) small-file explosion on high-cardinality
-  partition columns. Off by default: for low-cardinality partitioning AQE
-  coalescing already keeps file counts sane and the shuffle is pure cost.
 
 File *naming* is committer-managed (``part-*``), diverging from the
 reference's ``{table}_{counter:06d}.parquet`` — documented divergence; the
@@ -43,6 +38,8 @@ from dativo_ingest_spark.operators.util import local_df
 
 TARGET_FILE_SIZE_MB_DEFAULT = 150
 _SAMPLE_ROWS = 1000
+#: the reference writer's codec (``parquet_writer.py:424-429``)
+_COMPRESSION = "snappy"
 
 
 def normalize_partition_col(name: str) -> str:
@@ -86,7 +83,7 @@ def with_partition_columns(
     return df, out_cols
 
 
-def _estimate_bytes_per_row(df: DataFrame, compression: str) -> float | None:
+def _estimate_bytes_per_row(df: DataFrame) -> float | None:
     """Reference's sizing trick (``parquet_writer.py:355-386``), Spark-side:
     write a ≤1000-row sample as parquet, measure, extrapolate. Row count
     comes from the written files' footers (no extra Spark action)."""
@@ -95,7 +92,7 @@ def _estimate_bytes_per_row(df: DataFrame, compression: str) -> float | None:
     with tempfile.TemporaryDirectory(prefix="dativo_size_probe_") as tmp:
         probe = Path(tmp) / f"probe_{uuid.uuid4().hex}"
         sample = df.limit(_SAMPLE_ROWS)
-        sample.coalesce(1).write.option("compression", compression).parquet(
+        sample.coalesce(1).write.option("compression", _COMPRESSION).parquet(
             str(probe)
         )
         files = list(probe.rglob("*.parquet"))
@@ -112,14 +109,11 @@ def write_partitioned(
     partitioning: list[str] | None = None,
     target_file_size_mb: int = TARGET_FILE_SIZE_MB_DEFAULT,
     mode: str = "append",
-    compression: str = "snappy",
     ingest_date: datetime.date | None = None,
-    colocate: bool = False,
     probe_df: DataFrame | None = None,
 ) -> list[str]:
-    """Write ``df`` as Hive-partitioned parquet; returns the partition
-    column names used. ``colocate=True`` adds a ``repartition`` on the
-    partition keys (one shuffle) for high-cardinality partitioning.
+    """Write ``df`` as Hive-partitioned, snappy-compressed parquet; returns
+    the partition column names used.
 
     ``probe_df``: frame to run the file-size probe on instead of ``df``.
     Pass a plan-equivalent frame when ``df`` carries ``observe()`` metrics
@@ -133,25 +127,15 @@ def write_partitioned(
                                               ingest_date)
     else:
         probe_out = out
-    bpr = _estimate_bytes_per_row(probe_out, compression)
-    writer = out.write.mode(mode).option("compression", compression)
+    bpr = _estimate_bytes_per_row(probe_out)
+    writer = out.write.mode(mode).option("compression", _COMPRESSION)
     if bpr:
         max_records = max(1, math.floor(target_file_size_mb * 1024 * 1024 / bpr))
         writer = writer.option("maxRecordsPerFile", max_records)
-    if colocate and pcols:
-        out = out.repartition(*[F.col(c) for c in pcols])
-        writer = out.write.mode(mode).option("compression", compression)
-        if bpr:
-            writer = writer.option("maxRecordsPerFile", max_records)
     if pcols:
         writer = writer.partitionBy(*pcols)
     writer.parquet(path)
     return pcols
-
-
-def read_partitioned(spark_df_reader, path: str) -> DataFrame:
-    """Counterpart reader (partition columns come back as ``_p_*`` strings)."""
-    return spark_df_reader.parquet(path)
 
 
 _HIVE_DIR_RE = re.compile(r"^(?P<col>[^=]+)=(?P<val>.*)$")

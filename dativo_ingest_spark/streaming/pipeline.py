@@ -930,11 +930,9 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
     every exactly-once writer here. ``dedup_opts`` pass through to the
     mode's operator (threshold, bands, num_hashes, ...).
     """
-    from dativo_ingest_spark.operators import dedup as dedup_mod
+    from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
 
-    if mode not in ("exact", "minhash", "embedding"):
-        raise ValueError(
-            f"mode must be exact, minhash or embedding, got {mode!r}")
+    dd = IngestDedup(mode, id_col, content_col, dedup_opts)
     qid = _query_id_resolver(query_id, checkpoint_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -949,46 +947,12 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
         ix_last = ix_head.properties.get(key)
         if ix_last is not None and int(ix_last) >= epoch_id:
             return   # fully processed epoch
-        spark = batch_df.sparkSession
-        if mode == "embedding":
-            from dativo_ingest_spark.operators import similarity
-
-            kept, _, _ = similarity.dedup_embeddings_against_index(
-                spark, batch_df, id_col, content_col, index_table,
-                branch=branch, commit=False, **dedup_opts)
-            if dedup_opts.get("index_codec") == "pq":
-                # PQ-coded index (r12): the deferred entries must carry
-                # codes, not raw vectors, or the next epoch's reader
-                # finds the wrong schema
-                entries = similarity.index_entries_pq(
-                    kept, id_col, content_col, dedup_opts["codebooks"],
-                    **{k: v for k, v in dedup_opts.items()
-                       if k in ("bands", "band_width", "scale")})
-            elif dedup_opts.get("index_codec") == "pq_residual":
-                # residual codec (r13): deferred entries carry coarse
-                # cell + residual codes under the frozen artifact
-                entries = similarity.index_entries_pq_residual(
-                    kept, id_col, content_col, dedup_opts["artifact"],
-                    **{k: v for k, v in dedup_opts.items()
-                       if k in ("bands", "band_width")})
-            else:
-                entries = similarity.index_entries(
-                    kept, id_col, content_col,
-                    **{k: v for k, v in dedup_opts.items()
-                       if k in ("bands", "band_width")})
-        elif mode == "minhash":
-            kept, _, _ = dedup_mod.dedup_minhash_against_index(
-                spark, batch_df, id_col, content_col, index_table,
-                branch=branch, commit=False, **dedup_opts)
-            entries = dedup_mod.index_entries_minhash(
-                kept, id_col, content_col,
-                **{k: v for k, v in dedup_opts.items()
-                   if k in ("n", "num_hashes", "rows_per_band")})
-        else:
-            kept, _, _ = dedup_mod.dedup_against_index(
-                spark, batch_df, id_col, content_col, index_table,
-                branch=branch, commit=False, **dedup_opts)
-            entries = dedup_mod.index_entries(kept, content_col)
+        kept, _, _ = dd.against_index(
+            batch_df.sparkSession, batch_df, index_table, branch=branch)
+        # the deferred entries carry the index codec's columns (PQ codes,
+        # cell + residual codes), or the next epoch's reader finds the
+        # wrong schema
+        entries = dd.index_entries(kept)
         try:
             out_head = out_table.snapshot(
                 out_table.current_version(branch))
@@ -1266,27 +1230,6 @@ def wap_epoch_writer(table, expectations: list[dict],
     return write_batch
 
 
-def psi_reference(df: DataFrame, value_col: str, n_bins: int = 10,
-                  exact: bool = True):
-    """Fit the PSI gate's reference: equi-depth edges + per-bin counts
-    from a trusted baseline frame (operators/profiling.py:psi_drift's
-    fit side, done once and persisted by the caller — batches are then
-    scored against the SAME frozen reference instead of re-fitting and
-    chasing the drift)."""
-    from dativo_ingest_spark.operators.quality import (
-        apply_equi_depth_bins, equi_depth_edges)
-
-    edges = equi_depth_edges(df, value_col, n_bins, exact=exact)
-    rows = (apply_equi_depth_bins(df, value_col, edges)
-            .filter(F.col("bin").isNotNull())
-            .groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-            .collect())
-    counts = [0] * (len(edges) + 1)
-    for r in rows:
-        counts[int(r.bin)] = int(r.n)
-    return edges, counts
-
-
 def mixture_admission_gate(rates_micro: dict, domain_col: str,
                            id_col: str, write_batch,
                            salt: str = "mixture",
@@ -1350,6 +1293,35 @@ def mixture_admission_gate(rates_micro: dict, domain_col: str,
     return _apply
 
 
+def _drift_gate(name: str, edges, value_col: str, write_batch, score,
+                on_drift: str, quarantine_batch):
+    """The action contract the PSI and KS gates share: bin each
+    micro-batch against the frozen ``edges`` (operators/drift.py), and
+    when ``score(counts)`` returns a drift report, ``skip`` (quarantine),
+    ``abort`` (raise) or ``log`` (write anyway, warn)."""
+    from dativo_ingest_spark.operators import drift
+
+    if on_drift not in ("abort", "skip", "log"):
+        raise ValueError(
+            f"on_drift must be abort|skip|log, got {on_drift!r}")
+    logger = logging.getLogger(__name__)
+
+    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+        report = score(drift.bin_counts(batch_df, value_col, edges))
+        if report is not None:
+            report = {"epoch": epoch_id, **report}
+            if on_drift == "abort":
+                raise RuntimeError(f"{name} drift gate: {report}")
+            logger.warning("%s drift gate (%s): %s", name, on_drift, report)
+            if on_drift == "skip":
+                if quarantine_batch is not None:
+                    quarantine_batch(batch_df, epoch_id)
+                return
+        write_batch(batch_df, epoch_id)
+
+    return _apply
+
+
 def psi_drift_gate(reference, value_col: str, write_batch,
                    threshold_milli: int = 250, on_drift: str = "skip",
                    quarantine_batch=None):
@@ -1360,9 +1332,10 @@ def psi_drift_gate(reference, value_col: str, write_batch,
     valid (nulls fine, ranges fine) while shifting the population; PSI
     catches exactly that class before it reaches training.
 
-    ``reference`` = (edges, counts) from :func:`psi_reference`. Per
-    epoch: one scan-stage bin cascade + a k-row count collect; the PSI
-    fold runs driver-side over k bins (the same Laplace-smoothed
+    ``reference`` = (edges, counts) from
+    ``operators/drift.py:drift_reference``. Per epoch: one scan-stage
+    bin cascade + a k-row count collect; the PSI fold runs driver-side
+    over k bins (``drift.psi_score``, the same Laplace-smoothed
     (p-q)*ln(p/q) as operators/profiling.py:psi_drift). Total PSI >=
     ``threshold_milli``/1000 (default 0.25 — the conventional
     'shifted' bar) triggers ``on_drift``:
@@ -1375,76 +1348,19 @@ def psi_drift_gate(reference, value_col: str, write_batch,
       epoch on restart.
     * ``log``: write anyway, warn with the per-bin report.
     """
-    import math
+    from dativo_ingest_spark.operators import drift
 
-    if on_drift not in ("abort", "skip", "log"):
-        raise ValueError(
-            f"on_drift must be abort|skip|log, got {on_drift!r}")
-    edges, ref_counts = reference
-    k = len(edges) + 1
-    if len(ref_counts) != k:
-        raise ValueError(
-            f"reference counts must have {k} bins, got {len(ref_counts)}")
-    t_ref = sum(ref_counts)
-    logger = logging.getLogger(__name__)
-    from dativo_ingest_spark.operators.quality import apply_equi_depth_bins
+    edges, ref_counts = drift.check_reference(reference)
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = (apply_equi_depth_bins(batch_df, value_col, edges)
-                .filter(F.col("bin").isNotNull())
-                .groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-                .collect())
-        cur = [0] * k
-        for r in rows:
-            cur[int(r.bin)] = int(r.n)
-        t_cur = sum(cur)
-        psi = 0.0
-        for i in range(k):
-            p = (ref_counts[i] + 1) / (t_ref + k)
-            q = (cur[i] + 1) / (t_cur + k)
-            psi += (p - q) * math.log(p / q)
+    def score(cur):
+        psi = drift.psi_score(ref_counts, cur)
         if psi * 1000 >= threshold_milli:
-            report = {"epoch": epoch_id, "psi": round(psi, 6),
-                      "bins": cur, "reference": ref_counts}
-            if on_drift == "abort":
-                raise RuntimeError(f"PSI drift gate: {report}")
-            logger.warning("PSI drift gate (%s): %s", on_drift, report)
-            if on_drift == "skip":
-                if quarantine_batch is not None:
-                    quarantine_batch(batch_df, epoch_id)
-                return
-        write_batch(batch_df, epoch_id)
+            return {"psi": round(psi, 6), "bins": cur,
+                    "reference": ref_counts}
+        return None
 
-    return _apply
-
-
-def ks_reference(df: DataFrame, value_col: str, n_points: int = 100,
-                 exact: bool = True):
-    """Fit the KS gate's frozen reference: ``n_points - 1`` interior
-    quantile cut values plus the ACTUAL per-bin reference counts —
-    O(n_points) state however large the baseline. Complement of
-    :func:`psi_reference`: PSI scores binned mass movement, KS bounds
-    the maximum ECDF gap and carries a calibrated significance
-    threshold with it.
-
-    The per-bin counts matter: equi-depth edges canNOT equalize bin
-    mass when the reference column has heavy ties at a quantile cut
-    (every tied row lands in one bin), so assuming ECDF_ref(cut j) =
-    (j+1)/n_points misestimates the true gap. The gate computes
-    ECDF_ref from the persisted counts instead — the same discipline
-    runner.py's KS gate uses with its ``_counts``."""
-    from dativo_ingest_spark.operators.quality import (
-        apply_equi_depth_bins, equi_depth_edges)
-
-    cuts = equi_depth_edges(df, value_col, n_points, exact=exact)
-    rows = (apply_equi_depth_bins(df, value_col, cuts)
-            .filter(F.col("bin").isNotNull())
-            .groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-            .collect())
-    ref_counts = [0] * (len(cuts) + 1)
-    for r in rows:
-        ref_counts[int(r.bin)] = int(r.n)
-    return cuts, ref_counts
+    return _drift_gate("PSI", edges, value_col, write_batch, score,
+                       on_drift, quarantine_batch)
 
 
 def ks_drift_gate(reference, value_col: str, write_batch,
@@ -1454,85 +1370,37 @@ def ks_drift_gate(reference, value_col: str, write_batch,
     Kolmogorov-Smirnov statistic against a FROZEN reference
     (operators/profiling.py:ks_drift's streaming sibling): per epoch
     ONE scan-stage ``<=``-cascade bin count, then a driver-side fold
-    over <= n_points bins computes D = max |ECDF_ref - ECDF_batch| on
-    the reference's quantile grid. ECDF_ref comes from the reference's
-    PERSISTED per-bin counts, not the equal-mass assumption
-    (j+1)/n_points — heavy ties at a quantile cut make equi-depth bins
-    unequal, and assuming equal mass would misestimate D and skew the
-    gate decision. Distribution-free, no stability rule of thumb: the
-    batch quarantines/aborts/logs when
+    over the bins (``drift.ks_score``) computes D = max |ECDF_ref -
+    ECDF_batch| on the reference's quantile grid, with ECDF_ref taken
+    from the reference's PERSISTED per-bin counts. Distribution-free,
+    no stability rule of thumb: the batch quarantines/aborts/logs when
     D > (c_milli/1000) * sqrt((n+m)/(n*m)) — alpha 0.05 at the default
-    1.358, 0.01 at 1.628.
+    1.358, 0.01 at 1.628. An empty batch is not a drift signal.
 
-    Same action contract as :func:`psi_drift_gate`: ``skip`` (with
-    optional ``quarantine_batch``), ``abort``, ``log``. Accepts a
-    legacy ``(cuts, n_ref)`` int reference (pre-counts persistence) by
-    falling back to the equal-mass assumption.
+    ``reference`` = (cuts, counts) from
+    ``operators/drift.py:drift_reference``; same action contract as
+    :func:`psi_drift_gate`: ``skip`` (with optional
+    ``quarantine_batch``), ``abort``, ``log``.
     """
-    import math
+    from dativo_ingest_spark.operators import drift
 
-    if on_drift not in ("abort", "skip", "log"):
-        raise ValueError(
-            f"on_drift must be abort|skip|log, got {on_drift!r}")
-    cuts, ref_counts = reference
-    if isinstance(ref_counts, int):          # legacy (cuts, n_ref) form
-        n_ref = ref_counts
-        ref_counts = None
-    else:
-        ref_counts = list(ref_counts)
-        n_ref = sum(ref_counts)
-    if not cuts or n_ref <= 0:
+    cuts, ref_counts = drift.check_reference(reference)
+    if not cuts or sum(ref_counts) <= 0:
         raise ValueError("reference must carry quantile cuts and a "
                          "positive row count")
-    if ref_counts is not None and len(ref_counts) != len(cuts) + 1:
-        raise ValueError(
-            f"reference counts must have {len(cuts) + 1} bins, got "
-            f"{len(ref_counts)}")
-    n_points = len(cuts) + 1
-    logger = logging.getLogger(__name__)
-    from dativo_ingest_spark.operators.quality import apply_equi_depth_bins
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = (apply_equi_depth_bins(batch_df, value_col, cuts)
-                .filter(F.col("bin").isNotNull())
-                .groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-                .collect())
-        counts = [0] * n_points
-        for r in rows:
-            counts[int(r.bin)] = int(r.n)
-        m = sum(counts)
+    def score(cur):
+        m = sum(cur)
         if m == 0:
-            write_batch(batch_df, epoch_id)   # nothing to test
-            return
-        d_stat = 0.0
-        cum = 0
-        cum_ref = 0
-        for j in range(n_points - 1):
-            cum += counts[j]
-            if ref_counts is not None:
-                # true reference ECDF from the persisted per-bin counts
-                cum_ref += ref_counts[j]
-                ecdf_ref = cum_ref / n_ref
-            else:
-                # legacy reference: equal-mass equi-depth assumption
-                ecdf_ref = (j + 1) / n_points
-            d_stat = max(d_stat, abs(ecdf_ref - cum / m))
-        crit = (c_milli / 1000.0) * math.sqrt(
-            (n_ref + m) / (n_ref * m))
+            return None                       # nothing to test
+        d_stat, crit = drift.ks_score(ref_counts, cur, c_milli)
         if d_stat > crit:
-            report = {"epoch": epoch_id, "d_stat": round(d_stat, 6),
-                      "crit": round(crit, 6), "n_batch": m,
-                      "bins": counts}
-            if on_drift == "abort":
-                raise RuntimeError(f"KS drift gate: {report}")
-            logger.warning("KS drift gate (%s): %s", on_drift, report)
-            if on_drift == "skip":
-                if quarantine_batch is not None:
-                    quarantine_batch(batch_df, epoch_id)
-                return
-        write_batch(batch_df, epoch_id)
+            return {"d_stat": round(d_stat, 6), "crit": round(crit, 6),
+                    "n_batch": m, "bins": cur}
+        return None
 
-    return _apply
+    return _drift_gate("KS", cuts, value_col, write_batch, score,
+                       on_drift, quarantine_batch)
 
 
 def quality_admission_gate(weights_micro: list[int], text_col: str,

@@ -114,19 +114,24 @@ def test_run_job_is_single_pass(spark, csv_file, tmp_path, monkeypatch):
     cursor and the write all ride the observe() metrics of the write
     action; the only other action is the bounded (<=1000-row) size probe.
     No count/collect anywhere on the success path."""
-    import pyspark.sql.dataframe as df_mod
     import pyspark.sql.readwriter as rw_mod
 
+    # the session's own DataFrame class: on Spark 4 that is the classic
+    # subclass, which overrides count/collect/isEmpty
+    frame_cls = type(spark.range(1))
     actions: list[str] = []
     for name in ("count", "collect", "toPandas", "toLocalIterator",
                  "isEmpty"):
-        orig = getattr(df_mod.DataFrame, name)
+        orig = getattr(frame_cls, name)
 
         def wrapper(self, *a, _n=name, _o=orig, **k):
             actions.append(_n)
             return _o(self, *a, **k)
 
-        monkeypatch.setattr(df_mod.DataFrame, name, wrapper)
+        monkeypatch.setattr(frame_cls, name, wrapper)
+    spark.range(1).count()
+    assert actions == ["count"]     # the spy is live
+    actions.clear()
     orig_parquet = rw_mod.DataFrameWriter.parquet
 
     def parquet_spy(self, *a, **k):

@@ -32,6 +32,24 @@ def test_valid_config_passes():
     schema_validation.validate_job_dict(VALID)  # no raise
 
 
+def test_target_option_enums_hold_the_runner_values(spark, tmp_path):
+    """commit/mode enums are the runner's own value sets: the default
+    ``commit: hive`` and ``mode: shard_export`` validate, an unknown
+    commit fails both the schema and run_job's startup check."""
+    def with_options(options):
+        return {**VALID, "target": {**VALID["target"], "options": options}}
+
+    schema_validation.validate_job_dict(
+        with_options({"commit": "hive", "mode": "shard_export"}))
+    with pytest.raises(ConfigError, match="commit"):
+        schema_validation.validate_job_dict(with_options({"commit": "bogus"}))
+    job = JobConfig.from_dict({
+        **with_options({"commit": "bogus"}),
+        "source": {"type": "csv", "path": str(tmp_path / "none.csv")}})
+    with pytest.raises(ConfigError, match="commit"):
+        runner.run_job(spark, job)
+
+
 def test_violations_listed_with_pointers():
     bad = {
         "tenant_id": "",                     # minLength 1

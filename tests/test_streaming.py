@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from dativo_ingest_spark.operators.drift import drift_reference
 from dativo_ingest_spark.queries import load
 from dativo_ingest_spark.streaming import pipeline
 from tests.conftest import SF_DIR
@@ -817,7 +818,7 @@ def test_psi_drift_gate(spark, tmp_path):
     # shifted far right -> only batch 2 must quarantine
     ref = spark.createDataFrame(
         [(float(i % 100),) for i in range(400)], "value double")
-    reference = pipeline.psi_reference(ref, "value", n_bins=4)
+    reference = drift_reference(ref, "value", n_bins=4)
 
     ok = spark.createDataFrame(
         [(float((i * 7) % 100),) for i in range(200)], "value double")
@@ -884,7 +885,7 @@ def test_ks_drift_gate(spark, tmp_path):
     # now with the calibrated distribution-free threshold
     ref = spark.createDataFrame(
         [(float(i % 100),) for i in range(400)], "value double")
-    reference = pipeline.ks_reference(ref, "value", n_points=20)
+    reference = drift_reference(ref, "value", n_bins=20)
     # the reference persists ACTUAL per-bin counts (ties can make
     # equi-depth bins unequal), not just the row total
     assert sum(reference[1]) == 400
@@ -938,7 +939,7 @@ def test_ks_drift_gate_heavy_ties(spark):
     ref = spark.createDataFrame(
         [(0.0,)] * 300 + [(float(i),) for i in range(1, 101)],
         "value double")
-    reference = pipeline.ks_reference(ref, "value", n_points=10)
+    reference = drift_reference(ref, "value", n_bins=10)
     assert sum(reference[1]) == 400
     assert max(reference[1]) >= 300          # the tied mass in one bin
 
@@ -958,18 +959,6 @@ def test_ks_drift_gate_heavy_ties(spark):
         [(float(200 + i),) for i in range(200)], "value double")
     gate(shifted, 1)
     assert quarantined == [1]
-
-    # legacy (cuts, n_ref) int references keep working (equal-mass
-    # fallback) — and on a ties-free reference the two forms agree
-    smooth = spark.createDataFrame(
-        [(float(i % 100),) for i in range(400)], "value double")
-    cuts, counts = pipeline.ks_reference(smooth, "value", n_points=20)
-    legacy_written = []
-    legacy_gate = pipeline.ks_drift_gate(
-        (cuts, 400), "value", lambda df, e: legacy_written.append(e))
-    legacy_gate(spark.createDataFrame(
-        [(float((i * 7) % 100),) for i in range(200)], "value double"), 0)
-    assert legacy_written == [0]
 
 
 class TestShardEpochWriter:
