@@ -22,7 +22,10 @@ Scale notes (the whole point of each design):
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1063,16 +1066,25 @@ _INLINE_TOUCHED_KEYS_LIMIT = 16_384
 
 def _observed_count(obs, frame: DataFrame) -> int:
     """Row count from an ``observe()`` metric, falling back to a real
-    ``count()`` job when the optimizer eliminated the CollectMetrics
-    node. Constant folding over driver-local relations (tiny
-    ``createDataFrame`` batches) can fold the observed subtree into a
-    LocalRelation, in which case the observation completes with a
-    schemaless empty row and ``.get`` raises — scan-backed batches (the
-    production shape) always keep the node and never pay the fallback."""
+    ``count()`` job when the CollectMetrics node was optimized away.
+
+    AQE can replace a subtree it finds empty at runtime (a batch whose
+    every document is shorter than the shingle width leaves no
+    signatures) with an empty relation, CollectMetrics included; the
+    observation then completes with a schemaless empty row, and ``.get``
+    raises a JVM ``AssertionError`` from ``PythonSQLUtils.toPyRow``. Only
+    that error takes the fallback, and it logs a warning because the
+    fallback costs one more job. Scan-backed batches with signatures (the
+    production shape) keep the node and never pay it."""
     try:
         return int(obs.get["n"])
-    except Exception:  # noqa: BLE001 — py4j assertion from the JVM
-        return frame.count()
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() \
+                != "java.lang.AssertionError":
+            raise
+    logging.getLogger(__name__).warning(
+        "observe() metric was optimized away; counting with a second job")
+    return frame.count()
 
 
 def _inline_key_filter(key_col: str, keys: list):
@@ -1104,10 +1116,10 @@ def _minhash_sig_frame(df: DataFrame, id_col: str, text_col: str,
     words have no shingles: their empty gram sets explode to zero rows,
     so no signature row exists for them. The ``repartition`` is the
     mandatory materialization barrier before the explode (gram_sets
-    docstring) — an id-keyed exchange of (id, grams) rows, the same
-    volume the signature shuffle moves anyway, chosen over ``cache()``
-    here so deferred-commit callers (index_entries_minhash) leak no
-    cache entry."""
+    docstring): an id-keyed exchange of (id, grams) rows, the same volume
+    the signature shuffle moves anyway. The one caller persists the
+    result, and both index appends (inline and deferred) build their
+    entries from that cache (:func:`index_entries_minhash`)."""
     grams = gram_sets(df, id_col, text_col, n).repartition("id")
     sig = _sig_from_grams(grams, num_hashes)
     return sig.select(
@@ -1173,19 +1185,21 @@ def dedup_minhash_against_index(
     Returns ``(kept_df, n_batch_dups, n_index_dups)`` with ``kept_df``
     persisted (caller unpersists), original batch schema.
 
-    Per-batch job shape (r15): the batch size rides the hot-cell
-    guard's aggregate as an ``observe()`` metric and the within-batch
-    survivor count rides the ``kept`` materialization the same way, so
-    a committed batch costs three jobs — guard/signature
-    materialization, verify+count, index append — instead of six.
-    ``stats`` (optional out-param) receives ``n_kept`` so callers that
-    need the kept-row count skip a fourth (cached-scan) job.
+    Per-batch job shape: the batch size rides the hot-cell guard's
+    aggregate as an ``observe()`` metric and the within-batch survivor
+    count rides the ``kept`` materialization the same way, so a batch
+    costs the guard/signature materialization, the verify+count job and,
+    when committed, the index append (one write job over the cached
+    signatures). ``stats`` (optional out-param) receives ``n_kept`` so
+    callers that need the kept-row count skip a cached-scan job. With
+    ``commit=False`` it also receives ``sig``, the persisted signature
+    frame, so a deferred append builds its entries without re-shingling
+    (:func:`index_entries_minhash`); the caller then unpersists ``sig``
+    as well. Without ``stats`` nothing outlives the call but ``kept``.
     """
-    import logging as _logging
-
     from pyspark.sql import Observation
 
-    log = _logging.getLogger(__name__)
+    log = logging.getLogger(__name__)
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     num_bands, rem = divmod(num_hashes, rows_per_band)
@@ -1276,50 +1290,38 @@ def dedup_minhash_against_index(
     if stats is not None:
         stats["n_kept"] = n_kept
     if commit and n_kept:
-        # entries come off the PERSISTED sig frame (semi-joined to the
-        # kept ids) — no signature recompute, and identical by
-        # construction to what index_entries_minhash would rebuild
         from dativo_ingest_spark.operators.util import (
             index_append_partitions)
 
-        # coalesce BELOW the explode/cast projection (on the semi-joined
-        # cached sig rows) so the single write task evaluates the chain
-        # once, not once per parent partition (see
-        # similarity.dedup_embedding_against_index)
         index_table.write_append(
-            sig.join(
-                kept.select(F.col(id_col).alias("id")),
-                "id", "left_semi",
-            ).coalesce(index_append_partitions(n_kept * num_bands))
-            .select(
-                F.col("id").cast("string").alias("id"),
-                F.explode("_keys").alias("key"),
-                F.col("_sig").alias("sig"),
-            ),
+            index_entries_minhash(
+                sig, kept.select(F.col(id_col).alias("id")),
+                index_append_partitions(n_kept * num_bands)),
             branch=branch)
     base.unpersist()
-    sig.unpersist()
+    if commit or stats is None:
+        sig.unpersist()
+    else:
+        stats["sig"] = sig
     return kept, n_batch_dups, n_index_dups
 
 
-def index_entries_minhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """The band-index rows for ``df`` — what
-    :func:`dedup_minhash_against_index` commits (one row per band per
-    sig-able doc: id, band key, full signature). Exposed separately for
-    deferred-commit callers (the runner appends AFTER its sink publish);
-    signatures are deterministic md5 chunk minima, so deferred rows match
-    an inline commit. Pass the SAME shingle/banding parameters the dedup
-    call used."""
-    return _minhash_sig_frame(
-        _widen(df), id_col, text_col, n, num_hashes, rows_per_band
-    ).select(
+def index_entries_minhash(sig: DataFrame, ids: DataFrame,
+                          num_files: int | None = None) -> DataFrame:
+    """The band-index rows (id, band key, full signature; one row per
+    band) for the documents in ``ids``, built from the persisted
+    ``(id, _sig, _keys)`` frame :func:`dedup_minhash_against_index`
+    computed: what its inline commit writes and what a deferred append
+    (the runner's, after its sink publish) writes, with no re-shingling.
+    ``ids`` holds one ``id`` column; a document without a signature row
+    (fewer than ``n`` words) gets no entry. The coalesce to ``num_files``
+    (when given) sits BELOW the explode, on the semi-joined cached rows,
+    so each write task evaluates the chain once instead of once per
+    parent partition (see similarity.dedup_embedding_against_index)."""
+    rows = sig.join(ids, "id", "left_semi")
+    if num_files is not None:
+        rows = rows.coalesce(num_files)
+    return rows.select(
         F.col("id").cast("string").alias("id"),
         F.explode("_keys").alias("key"),
         F.col("_sig").alias("sig"),

@@ -772,9 +772,6 @@ def dedup_embeddings_against_index(
     if stats is not None:
         stats["n_kept"] = n_kept
     if commit and n_kept:
-        from dativo_ingest_spark.operators.util import (
-            index_append_partitions)
-
         # coalesced append: see dedup.dedup_against_index — avoids one
         # near-empty index file per shuffle partition per batch. The
         # coalesce goes on the INPUT, not the computed entries: a
@@ -787,11 +784,11 @@ def dedup_embeddings_against_index(
         # INDEX_APPEND_ROWS_PER_FILE entry rows.
         from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
 
-        src = kept.coalesce(index_append_partitions(n_kept * bands))
         entries = IngestDedup("embedding", id_col, vec_col, {
             "bands": bands, "band_width": band_width,
             "index_codec": index_codec, "codebooks": codebooks,
-            "scale": scale, "artifact": artifact}).index_entries(src)
+            "scale": scale, "artifact": artifact}).index_entries(
+                kept, n_rows=n_kept)
         index_table.write_append(entries, branch=branch)
     staged.unpersist()
     return kept, n_batch_dups, n_index_dups

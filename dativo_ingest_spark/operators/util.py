@@ -9,11 +9,39 @@ def widen(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the scan produced fewer partitions than
     cores (tiny/single-file inputs) so expression- or Python-heavy pipeline
     stages use the whole executor pool. No-op at scale, where scans already
-    have ample partitions — the check costs a plan inspection, never a job."""
+    have ample partitions.
+
+    Decided from the unexecuted physical plan, never a job: a frame whose
+    plan (cached sub-plans included) already holds an exchange is returned
+    unchanged, because asking it for its partition count makes AQE run the
+    stages below that exchange. Its width is the exchange's (an earlier
+    widen's, or the shuffle width AQE sized by bytes). Only exchange-free
+    (scan-backed) frames are measured, which plans file splits but runs
+    nothing."""
+    if _holds_exchange(df._jdf.queryExecution().executedPlan()):
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _holds_exchange(plan) -> bool:
+    """Whether a physical plan tree holds a shuffle or broadcast exchange.
+    AQE's wrapper counts as one (it is planned only around exchanges and
+    subqueries), and an in-memory scan is searched through its cached
+    plan (``innerChildren``)."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name.endswith(("Exchange", "QueryStage")) \
+                or name == "AdaptiveSparkPlan":
+            return True
+        for seq in (node.children(), node.innerChildren()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
 
 #: rows per partition for driver-local result frames — large enough that
 #: every realistic collected result fits in one partition, small enough

@@ -262,7 +262,26 @@ def run_job(
 
     ``mode`` gates connectors against the registry (reference
     validator.py:88-241): in ``cloud`` mode database connectors are
-    rejected before extraction."""
+    rejected before extraction. Every frame the job persists is released
+    on return and on raise alike."""
+    cleanup: list = []
+    try:
+        return _run_job(spark, job, state_root, classification_overrides,
+                        governance_overrides, finops_overrides, catalog,
+                        mode, cleanup)
+    finally:
+        for frame in cleanup:
+            try:
+                frame.unpersist()
+            except Exception:  # pragma: no cover - session teardown races
+                pass
+
+
+def _run_job(spark, job, state_root, classification_overrides,
+             governance_overrides, finops_overrides, catalog, mode,
+             _cleanup: list) -> JobResult:
+    """:func:`run_job`'s body; ``_cleanup`` collects the persisted frames
+    the caller releases on every exit path."""
     registry.gate_job(job, mode)
     # Fail-at-startup for mode/commit combinations that would otherwise
     # silently degrade to a plain append (exit 2 before any data moves):
@@ -400,14 +419,7 @@ def run_job(
     # never in the exit code (reference cli.py:236-244 catches-and-logs).
     infra = infrastructure.validate_infrastructure(job)
 
-    _cleanup: list = []   # persisted frames to release on any exit path
-
     def _finish(res: JobResult) -> JobResult:
-        for frame in _cleanup:
-            try:
-                frame.unpersist()
-            except Exception:  # pragma: no cover - session teardown races
-                pass
         res.infrastructure = infra
         logging.getLogger(__name__).info(
             "job metrics: %s", json.dumps(res.metrics(), sort_keys=True))
@@ -430,7 +442,7 @@ def run_job(
     # are reported separately in JobResult.dedup_dropped.
     dedup_dropped: dict[str, int] = {}
     dedup_index_table = None
-    dedup_kept = None
+    dedup_kept = dedup_sig = None
     pre_dedup_df = None
     if dedup_conf is not None:
         pre_dedup_df = df
@@ -440,11 +452,11 @@ def run_job(
                     f"target.options.dedup field {c!r} not in the "
                     f"extracted columns {sorted(df.columns)}")
         dedup_index_table = table_commit.FsTable.create(dedup_index_path)
-        kept, n_b, n_i = dedup_conf.against_index(
+        kept, n_b, n_i, dedup_sig = dedup_conf.against_index(
             spark, df, dedup_index_table)
         dedup_dropped = {"batch": int(n_b), "index": int(n_i)}
         df = dedup_kept = kept
-        _cleanup.append(kept)
+        _cleanup.extend(f for f in (kept, dedup_sig) if f is not None)
 
     # Single-pass lifecycle: validation counters, the max-cursor state value
     # and the write all ride ONE source scan — observe() metrics on the
@@ -999,7 +1011,8 @@ def run_job(
     # contract projection dropped it from the sink), restricted to the
     # rows that actually PUBLISHED via a semi-join on the validated
     # frame's ids — valid-only under strict/bypass, all rows under warn.
-    # Both sides hit persisted caches.
+    # Both sides hit persisted caches; minhash entries come off the
+    # signature frame the operator persisted, semi-joined to those ids.
     if dedup_index_table is not None and dedup_kept is not None \
             and n_rows > 0:
         if mode == "strict" or bypass:
@@ -1013,22 +1026,11 @@ def run_job(
             # warn mode publishes every row — index them all directly
             # (a coerced-NULL id would silently fall out of a semi-join)
             published = dedup_kept
-        from dativo_ingest_spark.operators.util import (
-            index_append_partitions)
-
-        # coalesce the cached INPUT below the entry-encode chain (not the
-        # computed entries above it): a top-side coalesce makes the single
-        # write task re-instantiate the encode chain — including its
-        # Arrow Python runner for the PQ codecs — once per parent
-        # partition, serially (see similarity.dedup_embedding_against_index
-        # for the measured 9x). Entry rows = published rows (x bands /
-        # bands-per-sig for the banded modes); the observation's
-        # post-dedup row count is a free upper bound on published rows
-        # (the target only sizes the file count, so an extra count() job
-        # over the semi-join would be pure waste).
-        published = published.coalesce(index_append_partitions(
-            n_rows * dedup_conf.entries_per_row()))
-        dedup_index_table.write_append(dedup_conf.index_entries(published))
+        # the observation's post-dedup row count is a free upper bound on
+        # published rows: it only sizes the append's file count, so an
+        # extra count() job over the semi-join would be pure waste
+        dedup_index_table.write_append(dedup_conf.index_entries(
+            published, sig=dedup_sig, n_rows=n_rows))
 
     # informational warn-mode sample: capped scan, only when errors exist
     sample = result.error_summary() if (invalid_count and result) else []

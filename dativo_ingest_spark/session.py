@@ -1,10 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
 The engine targets large clusters (the reference's workload re-imagined at
-100 TB): AQE on (runtime coalesce + skew-join handling), Arrow for any
-Python-boundary exchange, UTC session time so timestamp semantics are
-deterministic across engines/oracles, snappy parquet for parity with the
-reference writer (reference: src/dativo_ingest/parquet_writer.py:424-429).
+100 TB): AQE on (runtime coalesce + skew-join handling, cached plans
+included), Arrow for any Python-boundary exchange, UTC session time so
+timestamp semantics are deterministic across engines/oracles, snappy
+parquet for parity with the reference writer (reference:
+src/dativo_ingest/parquet_writer.py:424-429).
 """
 
 from __future__ import annotations
@@ -20,6 +21,15 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce the final stage of a CACHED plan too. Spark's
+    # default (false) freezes every persisted frame at
+    # spark.sql.shuffle.partitions, so a 200-row dedup-on-ingest batch
+    # cached after its joins was written as one near-empty parquet file
+    # per shuffle partition, and every later read of the target paid for
+    # them. With this on, a cached frame is sized by bytes
+    # (advisoryPartitionSizeInBytes) like any other final stage: one
+    # partition for a small batch, thousands at 100 TB.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Arrow batches for pandas UDF / mapInPandas boundaries (10-100x over
     # row-at-a-time pickling).
     "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -947,12 +947,12 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
         ix_last = ix_head.properties.get(key)
         if ix_last is not None and int(ix_last) >= epoch_id:
             return   # fully processed epoch
-        kept, _, _ = dd.against_index(
+        kept, _, _, sig = dd.against_index(
             batch_df.sparkSession, batch_df, index_table, branch=branch)
         # the deferred entries carry the index codec's columns (PQ codes,
         # cell + residual codes), or the next epoch's reader finds the
         # wrong schema
-        entries = dd.index_entries(kept)
+        entries = dd.index_entries(kept, sig=sig)
         try:
             out_head = out_table.snapshot(
                 out_table.current_version(branch))
@@ -966,6 +966,8 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
                 entries, branch=branch, properties={key: str(epoch_id)})
         finally:
             kept.unpersist()
+            if sig is not None:
+                sig.unpersist()
 
     return write_batch
 

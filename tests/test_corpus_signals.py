@@ -411,6 +411,90 @@ class TestMinhashAgainstIndex:
             dedup.dedup_minhash_against_index(
                 spark, b, "doc_id", "text", table, rows_per_band=3)
 
+    def test_entries_come_from_the_persisted_signatures(self, spark,
+                                                         tmp_path):
+        """The inline commit and the deferred IngestDedup append both
+        build entries from the operator's persisted signatures; row for
+        row they equal a fresh shingle-and-hash of the kept documents. An
+        exact copy drops within the batch, a doc shorter than n words is
+        kept without an entry."""
+        from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
+
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        rows = [("d1", base), ("d2", base),
+                ("d3", "completely different content about spark shuffles"),
+                ("s1", "two words")]
+        b = self._frame(spark, rows)
+
+        def fresh_entries(ids):
+            kept_rows = self._frame(
+                spark, [r for r in rows if r[0] in ids])
+            return sorted(
+                (r.id, r.key, tuple(r.sig)) for r in
+                dedup._minhash_sig_frame(kept_rows, "doc_id", "text",
+                                         3, 8, 2)
+                .select(F.col("id").cast("string").alias("id"),
+                        F.explode("_keys").alias("key"),
+                        F.col("_sig").alias("sig")).collect())
+
+        expected = fresh_entries({"d1", "d3", "s1"})
+        assert {e[0] for e in expected} == {"d1", "d3"}
+        assert len(expected) == 2 * 4   # one row per band per sig-able doc
+
+        inline = self._table(tmp_path)
+        kept, bd, _ = dedup.dedup_minhash_against_index(
+            spark, b, "doc_id", "text", inline)
+        assert sorted(r.doc_id for r in kept.collect()) == ["d1", "d3", "s1"]
+        assert bd == 1
+        kept.unpersist()
+        assert sorted((r.id, r.key, tuple(r.sig))
+                      for r in inline.read(spark).collect()) == expected
+
+        dd = IngestDedup("minhash", "doc_id", "text", {})
+        deferred = self._table(tmp_path / "deferred")
+        kept, _, _, sig = dd.against_index(spark, b, deferred)
+        try:
+            assert sig.is_cached
+            entries = dd.index_entries(kept, sig=sig, n_rows=3)
+            assert sorted((r.id, r.key, tuple(r.sig))
+                          for r in entries.collect()) == expected
+        finally:
+            kept.unpersist()
+            sig.unpersist()
+
+    def test_folded_observation_falls_back_loudly(self, spark, tmp_path,
+                                                  caplog):
+        """A batch with no signatures lets AQE drop the observed subtree:
+        the count falls back to one extra job, logged once. A scan-backed
+        batch keeps its observations and logs nothing."""
+        import logging
+
+        caplog.set_level(logging.WARNING, logger=dedup.__name__)
+        short = self._frame(spark, [("s1", "two words"),
+                                    ("s2", "two words"),
+                                    ("s3", "tiny doc")])
+        kept, bd, idx = dedup.dedup_minhash_against_index(
+            spark, short, "doc_id", "text", self._table(tmp_path))
+        assert (kept.count(), bd, idx) == (3, 0, 0)
+        kept.unpersist()
+        fallbacks = [r for r in caplog.records
+                     if "optimized away" in r.getMessage()]
+        assert len(fallbacks) == 1
+
+        caplog.clear()
+        path = str(tmp_path / "batch")
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        self._frame(spark, [("d1", base), ("d2", base),
+                            ("d3", "other words about spark and joins")]) \
+            .write.parquet(path)
+        kept, bd, idx = dedup.dedup_minhash_against_index(
+            spark, spark.read.parquet(path), "doc_id", "text",
+            self._table(tmp_path / "scan"))
+        assert (kept.count(), bd, idx) == (2, 1, 0)
+        kept.unpersist()
+        assert not [r for r in caplog.records
+                    if "optimized away" in r.getMessage()]
+
     def test_hot_cell_admits_undeduped(self, spark, tmp_path):
         table = self._table(tmp_path)
         pile_text = "spam spam spam wonderful spam spam baked beans spam"

@@ -1152,6 +1152,67 @@ class TestDedupOnIngestOption:
         back = spark.read.parquet(str(tmp_path / "o2"))
         assert [r.id for r in back.collect()] == [4]
 
+    def _minhash_batch(self, tmp_path, name, rows):
+        src = tmp_path / f"{name}.csv"
+        src.write_text("id,name,active\n" + "".join(
+            f"{i},{text},{flag}\n" for i, text, flag in rows))
+        return str(src)
+
+    def _minhash_job(self, src, out, index, **kw):
+        return self._job(src, out, index, extra={"mode": "minhash"}, **kw)
+
+    def test_minhash_tiny_batch_publishes_one_file(self, spark, tmp_path):
+        """A small batch is written at its real size: the cached kept
+        frame is coalesced by bytes, not held at the shuffle width."""
+        import glob
+
+        text = "the quick brown fox jumps over the lazy dog"
+        src = self._minhash_batch(tmp_path, "b", [
+            (1, text, "true"), (2, text, "true"),
+            (3, "spark shuffles rows between stages", "true"),
+            (4, "two words", "true")])
+        out = str(tmp_path / "o")
+        index = str(tmp_path / "ix")
+        r = runner.run_job(spark, self._minhash_job(src, out, index))
+        assert r.exit_code == runner.EXIT_SUCCESS
+        assert r.records_in == 3 and r.dedup_dropped["batch"] == 1
+        assert len(glob.glob(f"{out}/*.parquet")) == 1
+        from dativo_ingest_spark.sinks import table_commit
+
+        entries = table_commit.FsTable(index).read(spark)
+        # 4 bands per sig-able doc; the 2-word doc has no signature
+        assert sorted({x.id for x in entries.collect()}) == ["1", "3"]
+        assert entries.count() == 8
+
+    def test_no_cache_outlives_the_job(self, spark, tmp_path):
+        """The kept frame and the persisted signatures are released on
+        success, on a strict-mode abort and on a config error raised
+        after the dedup ran."""
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        text = "the quick brown fox jumps over the lazy dog"
+        ok = self._minhash_batch(tmp_path, "ok", [
+            (1, text, "true"), (2, "spark shuffles rows", "true")])
+        bad = self._minhash_batch(tmp_path, "bad", [
+            (3, "fresh words for a new doc", "maybe")])
+        index = str(tmp_path / "ix")
+
+        r = runner.run_job(spark, self._minhash_job(
+            ok, str(tmp_path / "o1"), index, mode="strict"))
+        assert r.exit_code == runner.EXIT_SUCCESS
+        assert cache.isEmpty()
+
+        r = runner.run_job(spark, self._minhash_job(
+            bad, str(tmp_path / "o2"), index, mode="strict"))
+        assert r.exit_code == runner.EXIT_FAILURE
+        assert cache.isEmpty()
+
+        job = self._minhash_job(bad, str(tmp_path / "o3"), index)
+        job.target.options["zorder"] = {"columns": {"nope": [0, 1]}}
+        with pytest.raises(ConfigError, match="zorder"):
+            runner.run_job(spark, job)
+        assert cache.isEmpty()
+
     def test_minhash_knobs_validated_at_preflight(self, spark, tmp_path):
         """Bad banding/threshold config must fail as a ConfigError BEFORE
         any data moves, not a mid-job ValueError."""

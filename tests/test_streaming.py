@@ -622,6 +622,40 @@ class TestStreamDedupOnIngest:
         assert ix.read(spark, branch="acme").count() == 1
 
 
+    def test_minhash_epochs_index_from_persisted_signatures(self, spark,
+                                                            tmp_path):
+        """mode=minhash: each epoch appends band entries built from the
+        operator's persisted signatures, and releases them (with the kept
+        frame) when the epoch ends."""
+        from dativo_ingest_spark.sinks.table_commit import FsTable
+        from dativo_ingest_spark.streaming.pipeline import (
+            dedup_epoch_writer)
+
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        out = FsTable.create(str(tmp_path / "corpus_mh"))
+        ix = FsTable.create(str(tmp_path / "ix_mh"))
+        writer = dedup_epoch_writer(out, ix, "doc_id", "text",
+                                    mode="minhash", query_id="qm")
+        text = ("the quick brown fox jumps over the lazy dog again and "
+                "again")
+        schema = "doc_id string, text string"
+        writer(spark.createDataFrame(
+            [("d1", text), ("d2", "two words")], schema), 0)
+        assert cache.isEmpty()
+        # 4 bands for d1; the 2-word doc is kept without an entry
+        assert sorted({r.id for r in ix.read(spark).collect()}) == ["d1"]
+        assert ix.read(spark).count() == 4
+
+        writer(spark.createDataFrame(
+            [("d3", text.replace("lazy", "sleepy")),
+             ("d4", "entirely fresh material about joins")], schema), 1)
+        assert cache.isEmpty()
+        assert sorted(r.doc_id for r in out.read(spark).collect()) == [
+            "d1", "d2", "d4"]
+        assert ix.read(spark).count() == 8
+
+
 class TestStreamWindowedRollup:
     """Watermarked UPDATE-mode windowed rollup into an FsTable
     (window_rollup_epoch_writer + stream_windowed_rollup): per-window

@@ -1,9 +1,11 @@
-"""r15 optimization measurement harness.
+"""Optimization measurement harness for one round of work.
 
-Two modes:
+Usage: ``python tools/profile_round.py ROUND (--plans | --time) [names...]``,
+where ``ROUND`` names the plan-dump directory and the Spark app (for
+example ``r16``). Two modes:
 
 * ``--plans [names...]`` — build each query at sf0.1 and save
-  ``.explain("formatted")`` to ``plans/r15/<name>_<tag>.txt`` (tag =
+  ``.explain("formatted")`` to ``plans/<ROUND>/<name>_<tag>.txt`` (tag =
   ``before``/``after`` via ``--tag``). Build-time side effects (eager
   probes, index commits) run, nothing else is executed.
 * ``--time [names...]`` — bench-methodology timing: warm each query once
@@ -29,13 +31,13 @@ from dativo_ingest_spark import get_spark  # noqa: E402
 from dativo_ingest_spark.queries import QUERIES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "plans", "r15")
+PLANS_ROOT = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "plans")
 
 
-def _spark(cpus: str):
+def _spark(cpus: str, round_name: str):
     spark = get_spark(
-        "r15-profile",
+        f"{round_name}-profile",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
         extra_conf={
@@ -58,6 +60,8 @@ def capture_plan(df) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("round", help="round name, e.g. r16: the plan-dump "
+                    "directory under plans/ and the Spark app name")
     ap.add_argument("--plans", action="store_true")
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--tag", default="before")
@@ -68,10 +72,11 @@ def main() -> None:
 
     import bench
     names = args.names or bench.HEADLINE
-    spark = _spark(args.cpus)
+    spark = _spark(args.cpus, args.round)
+    plans_dir = os.path.join(PLANS_ROOT, args.round)
 
     if args.plans:
-        os.makedirs(PLANS_DIR, exist_ok=True)
+        os.makedirs(plans_dir, exist_ok=True)
         for name in names:
             spark.sparkContext.setJobDescription(f"plan: {name}")
             spark.catalog.clearCache()
@@ -80,7 +85,7 @@ def main() -> None:
                 text = capture_plan(df)
             except Exception as ex:  # noqa: BLE001
                 text = f"ERROR {type(ex).__name__}: {ex}"
-            path = os.path.join(PLANS_DIR, f"{name}_{args.tag}.txt")
+            path = os.path.join(plans_dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as fh:
                 fh.write(text)
             n_ex = text.count("Exchange")
