@@ -121,10 +121,10 @@ def drop_hot_buckets(bands: DataFrame, max_bucket_size: int) -> DataFrame:
 MAX_INLINE_HOT_KEYS = 1024
 
 
-def _without_hot_keys(df: DataFrame, key_col: str, max_count: int,
-                      max_inline: int = MAX_INLINE_HOT_KEYS,
-                      stats: dict | None = None,
-                      collect_keys: int = 0) -> DataFrame:
+def without_hot_keys(df: DataFrame, key_col: str, max_count: int,
+                     max_inline: int = MAX_INLINE_HOT_KEYS,
+                     stats: dict | None = None,
+                     collect_keys: int = 0) -> DataFrame:
     """Heavy-hitter cut with a driver-resolved fast path.
 
     The r3 guards kept the key-count aggregate + broadcast anti-join as
@@ -225,7 +225,7 @@ def ngram_jaccard_pairs(
     if max_gram_df is not None:
         # grams is cached above, so the guard resolves driver-side (one
         # cheap job); on a clean corpus the self-join plan stays untouched
-        inv = _without_hot_keys(inv, "gram", max_gram_df)
+        inv = without_hot_keys(inv, "gram", max_gram_df)
     a, b = inv.alias("a"), inv.alias("b")
     shared = (
         a.join(b, (F.col("a.gram") == F.col("b.gram"))
@@ -340,7 +340,7 @@ def minhash_lsh_pairs(
         # once (guard job materializes it), the self-join sides read the
         # cached (id, bucket) rows — O(docs x bands x ~30B), spill-safe
         bands = bands.cache()
-        bands = _without_hot_keys(bands, "bucket", max_bucket_size)
+        bands = without_hot_keys(bands, "bucket", max_bucket_size)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -1026,7 +1026,7 @@ def dedup_against_index(
         # not the computed entries — a coalesce above the fingerprint
         # expressions re-instantiates the whole evaluation chain once
         # per parent partition inside the single write task (see
-        # similarity.dedup_embedding_against_index).
+        # ingest_dedup.IngestDedup.index_entries).
         index_table.write_append(
             index_entries(kept.coalesce(index_append_partitions(n_kept)),
                           text_col),
@@ -1046,14 +1046,18 @@ def index_entries(df: DataFrame, text_col: str) -> DataFrame:
     return with_fingerprint(_widen(df), text_col).select("fingerprint")
 
 
-#: default in-cell population cap for the ingest-time MinHash band joins
-#: (same role as similarity.MAX_CELL_SIZE_DEFAULT: one boilerplate band
-#: cell must not concentrate a quadratic pair task on a shuffle key).
-INGEST_MAX_CELL_SIZE = 10_000
+#: default in-cell population cap for the banded pair joins (the ingest
+#: operators below and similarity.bucketed_neardup_pairs): one degenerate
+#: cell (a boilerplate band, a zero-vector pile) must not concentrate a
+#: B²/2-pair task on one shuffle key. Expected cell size under
+#: corpus-scaled clustering is ~queries._SEMANTIC_CELL_SIZE (64), so the
+#: default only fires on pathological piles.
+MAX_CELL_SIZE_DEFAULT = 10_000
 
-#: above this many (row, band) keys the MinHash index dedup skips the
-#: broadcast cell pre-filter and lets the scoring join shuffle both sides.
-_MINHASH_INDEX_BROADCAST_LIMIT = 4_000_000
+#: above this many (row, band) keys :func:`banded_against_index` skips the
+#: broadcast prune of the index scan and lets the scoring join shuffle
+#: both sides; band keys are short strings, so the default is generous.
+_INDEX_BROADCAST_LIMIT = 4_000_000
 
 #: up to this many distinct batch band keys are harvested driver-side from
 #: the hot-cell guard's aggregate (a bounded collect over key-grain rows)
@@ -1064,27 +1068,35 @@ _MINHASH_INDEX_BROADCAST_LIMIT = 4_000_000
 _INLINE_TOUCHED_KEYS_LIMIT = 16_384
 
 
-def _observed_count(obs, frame: DataFrame) -> int:
-    """Row count from an ``observe()`` metric, falling back to a real
-    ``count()`` job when the CollectMetrics node was optimized away.
+def observation_or_none(obs, fallback: str) -> dict | None:
+    """``obs.get``, or ``None`` when the CollectMetrics node was optimized
+    away, logging a warning that names the caller's ``fallback``.
 
     AQE can replace a subtree it finds empty at runtime (a batch whose
     every document is shorter than the shingle width leaves no
     signatures) with an empty relation, CollectMetrics included; the
     observation then completes with a schemaless empty row, and ``.get``
     raises a JVM ``AssertionError`` from ``PythonSQLUtils.toPyRow``. Only
-    that error takes the fallback, and it logs a warning because the
-    fallback costs one more job. Scan-backed batches with signatures (the
-    production shape) keep the node and never pay it."""
+    that error is recognized; any other propagates. The warning is there
+    because every fallback costs at least one more job."""
     try:
-        return int(obs.get["n"])
+        return obs.get
     except Py4JJavaError as exc:
         if exc.java_exception.getClass().getName() \
                 != "java.lang.AssertionError":
             raise
     logging.getLogger(__name__).warning(
-        "observe() metric was optimized away; counting with a second job")
-    return frame.count()
+        "observe() metric was optimized away; %s", fallback)
+    return None
+
+
+def _observed_count(obs, frame: DataFrame) -> int:
+    """Row count from an ``observe()`` metric named ``n``, falling back to
+    a real ``count()`` job when the metric was optimized away
+    (:func:`observation_or_none`). Scan-backed batches with signatures
+    (the production shape) keep the node and never pay it."""
+    got = observation_or_none(obs, "counting with a second job")
+    return frame.count() if got is None else int(got["n"])
 
 
 def _inline_key_filter(key_col: str, keys: list):
@@ -1104,6 +1116,147 @@ def _inline_key_filter(key_col: str, keys: list):
         "'" + str(k).replace("\\", "\\\\").replace("'", "''") + "'"
         for k in keys)
     return F.expr(f"{key_col} IN ({quoted})")
+
+
+def banded_against_index(spark, base: DataFrame, obs_total,
+                         keyed: DataFrame, score, threshold: float,
+                         index_table, index_cols: list, entries, *,
+                         id_col: str, bands: int, branch: str, commit: bool,
+                         max_cell_size: int | None, stats: dict | None,
+                         cap_hint: str, drop: tuple = (), decode=None):
+    """Banded near-dup-on-ingest against a persistent band index: the one
+    filter-then-verify pipeline behind :func:`dedup_minhash_against_index`
+    (Jaccard estimate over MinHash signatures) and
+    ``similarity.dedup_embeddings_against_index`` (cosine over embeddings).
+
+    Inputs. ``base`` is the batch, persisted, carrying ``obs_total`` (an
+    ``observe()`` row count named ``n``). ``keyed`` is one ``(id,
+    payload..., _key)`` row per batch row and band, built from cached
+    frames. ``score(p, q)`` is the pair score of two payloads whose columns
+    are named ``p + name`` and ``q + name``: ``("a.", "b.")`` in the
+    within-batch self-join, ``("", "_ix")`` in the index join.
+    ``index_cols`` are the index payload columns, read as ``_ix_<name>``
+    beside ``key AS _key``; ``decode`` (the PQ codecs) maps the pruned
+    index slice to the payload ``score`` reads. ``entries(kept, n_kept)``
+    builds the inline commit's index rows. ``drop`` names the staging
+    columns ``base`` adds to the batch; ``base`` is unpersisted before
+    returning.
+
+    Semantics. Within the batch, one-pass lower-id-wins: a row with a
+    smaller-id candidate scoring ``>= threshold`` in a shared band drops.
+    Ids are assumed unique within the batch (the loser rule keys on id).
+    A survivor with an index candidate scoring ``>= threshold`` drops too.
+    History is represented only by the index (``bands`` rows per admitted
+    document) and never rescanned.
+
+    Crash contract. With ``commit`` the survivors' index rows append
+    atomically AFTER the filter, so a crash re-admits rather than loses,
+    and a replay of a committed batch drops its rows against the committed
+    entries: an exact duplicate agrees on every band and scores 1.0. With
+    ``commit=False`` the caller appends after its own publish
+    (``ingest_dedup.IngestDedup``).
+
+    100 TB shape. Everything shuffles on the band key. The batch's distinct
+    keys prune the index scan before the scoring join, so the index is
+    never shuffled and per-batch exchange is O(batch) as history grows:
+    one parsed ``IN`` predicate when the hot-cell guard's aggregate
+    harvested them, else a broadcast left-semi filter (up to
+    ``_INDEX_BROADCAST_LIMIT`` keys), else a plain shuffle join.
+    ``max_cell_size`` excludes batch cells above the cap from both scoring
+    joins (their rows admit un-deduped, logged).
+
+    Job shape. The guard's aggregate materializes ``base`` and ``keyed``
+    and carries the batch size as ``obs_total``; the ``kept`` count
+    materializes the persisted result and carries the within-batch
+    survivor count as another ``observe()`` metric; a committed batch adds
+    the index append's write. Returns ``(kept, n_batch_dups,
+    n_index_dups)`` with ``kept`` persisted (the caller unpersists) in the
+    batch schema. ``stats`` (optional out-param) receives ``n_kept``, so
+    callers that need the kept-row count skip a cached-scan job.
+    ``cap_hint`` names the operator and its cell-size knob in the guard's
+    warning.
+
+    Partitioning. The within-batch survivors are repartitioned on the id,
+    the exchange the index anti-join needs anyway, so ``kept`` always comes
+    out of an exchange that AQE coalesces to its real size (one partition
+    for a small batch). Left to the join, that exchange exists only if AQE
+    creates it before it re-plans the join (to a broadcast against a small
+    index, or away against an empty one), so a small batch would be cached
+    at ``base``'s width or as one partition depending on timing."""
+    from pyspark.sql import Observation
+
+    touched_keys = None
+    if max_cell_size is not None:
+        gstats: dict = {}
+        guarded = without_hot_keys(
+            keyed, "_key", max_cell_size, stats=gstats,
+            collect_keys=_INLINE_TOUCHED_KEYS_LIMIT)
+        touched_keys = gstats.get("keys")
+        if guarded is not keyed:
+            logging.getLogger(__name__).warning(
+                "batch cells over max_cell_size=%d excluded from scoring "
+                "(their rows admit un-deduped); %s", max_cell_size, cap_hint)
+        keyed = guarded
+        n_total = _observed_count(obs_total, base)
+    else:
+        n_total = base.count()
+
+    a, b = keyed.alias("a"), keyed.alias("b")
+    # evaluated exactly once, inside the kept materialization below (the
+    # after-batch counter rides that same job as an observe() metric, so
+    # no second consumer needs a persist here)
+    batch_losers = (
+        a.join(b, (F.col("a._key") == F.col("b._key"))
+               & (F.col("b.id") < F.col("a.id")))
+        .filter(score("a.", "b.") >= threshold)
+        .select(F.col("a.id").alias("id")).distinct()
+    )
+
+    if branch != "main" and index_table.current_version(branch) is None:
+        index_table.create_branch(branch)
+    head = index_table.snapshot(index_table.current_version(branch))
+    if head.files:
+        index = index_table.read(spark, branch=branch).select(
+            F.col("key").alias("_key"),
+            *[F.col(c).alias(f"_ix_{c}") for c in index_cols])
+        if touched_keys is not None:
+            index = index.filter(_inline_key_filter("_key", touched_keys))
+        elif n_total * bands <= _INDEX_BROADCAST_LIMIT:
+            index = index.join(
+                F.broadcast(keyed.select("_key").distinct()),
+                "_key", "left_semi")
+        if decode is not None:
+            # after the prune: only the touched slice pays the decode
+            index = decode(index)
+        index_hits = (
+            keyed.join(index, "_key")
+            .filter(score("", "_ix") >= threshold)
+            .select("id").distinct()
+        )
+    else:
+        index_hits = local_df(spark, [], "id string").select(
+            F.col("id").cast(keyed.schema["id"].dataType).alias("id"))
+
+    obs_after = Observation()
+    after_batch = base.join(
+        batch_losers, base[id_col] == batch_losers["id"], "left_anti"
+    ).observe(obs_after, F.count(F.lit(1)).alias("n")).repartition(id_col)
+    # persist the frame we RETURN: persisting a parent and returning a
+    # child would make the caller's unpersist() a no-op
+    kept = after_batch.join(
+        index_hits, base[id_col] == index_hits["id"], "left_anti")
+    kept = (kept.drop(*drop) if drop else kept).persist()
+    # kept's parallel count materializes the cache (folding it into the
+    # commit write was measured slower: the cache then fills serially
+    # inside the single-task coalesce)
+    n_kept = kept.count()
+    n_after_batch = _observed_count(obs_after, after_batch)
+    if stats is not None:
+        stats["n_kept"] = n_kept
+    if commit and n_kept:
+        index_table.write_append(entries(kept, n_kept), branch=branch)
+    base.unpersist()
+    return kept, n_total - n_after_batch, n_after_batch - n_kept
 
 
 def _minhash_sig_frame(df: DataFrame, id_col: str, text_col: str,
@@ -1148,50 +1301,28 @@ def dedup_minhash_against_index(
     threshold: float = 0.5,
     branch: str = "main",
     commit: bool = True,
-    max_cell_size: int | None = INGEST_MAX_CELL_SIZE,
-    broadcast_limit: int = _MINHASH_INDEX_BROADCAST_LIMIT,
+    max_cell_size: int | None = MAX_CELL_SIZE_DEFAULT,
     stats: dict | None = None,
 ):
     """Text NEAR-dup-on-ingest against a persistent MinHash band index —
     the third leg of the ingest-dedup triad (``dedup_against_index``
     catches exact content, ``similarity.dedup_embeddings_against_index``
     catches high-cosine embeddings; this catches lightly-edited copy
-    sharing most word shingles, with no embedding required).
+    sharing most word shingles, with no embedding required). Runs
+    :func:`banded_against_index`, which states the job shape and the crash
+    contract.
 
-    The historical corpus is represented ONLY by its band index
-    (``num_hashes/rows_per_band`` rows per admitted doc: band key +
-    signature), never rescanned. Per batch: one shingle scan computing
-    signatures, a within-batch cell self-join (one-pass lower-id-wins,
-    the family convention), and a band-key equi-join against the index.
-    Candidates verify by ESTIMATED Jaccard — the fraction of agreeing
-    minwise components, the standard MinHash estimate — not the exact
-    gram-set Jaccard the pair-mining path uses: storing gram sets in the
-    index would make it corpus-sized, defeating the point. Exact
-    duplicates have identical signatures, agree on every band, estimate
-    1.0 — so replaying a committed batch drops it by construction (the
-    crash-window contract of the exact twin). Docs with fewer than ``n``
-    words have no signature: always kept, never indexed (their replays
-    re-publish — run the exact twin for those, documented limitation
-    mirroring the embedding twin's zero-norm vectors).
+    An index row is one band key plus the full signature
+    (``num_hashes/rows_per_band`` rows per admitted doc). Candidates
+    verify by ESTIMATED Jaccard — the fraction of agreeing minwise
+    components, the standard MinHash estimate — not the exact gram-set
+    Jaccard the pair-mining path uses: storing gram sets in the index
+    would make it corpus-sized. Docs with fewer than ``n`` words have no
+    signature: always kept, never indexed (their replays re-publish — run
+    the exact twin for those, mirroring the embedding twin's zero-norm
+    vectors).
 
-    100 TB shape: everything shuffles on the band key; the batch's
-    distinct band keys prune the index SCAN — inlined as a pushdown
-    predicate when the hot-cell guard's aggregate already harvested
-    them (no separate distinct/broadcast job), else broadcast as a
-    left-semi filter (under ``broadcast_limit``) — so the index is
-    never shuffled and per-batch exchange cost is O(batch), flat as
-    history grows. ``max_cell_size`` guards degenerate cells exactly
-    like the embedding twin (hot-cell rows admit un-deduped, logged).
-    Returns ``(kept_df, n_batch_dups, n_index_dups)`` with ``kept_df``
-    persisted (caller unpersists), original batch schema.
-
-    Per-batch job shape: the batch size rides the hot-cell guard's
-    aggregate as an ``observe()`` metric and the within-batch survivor
-    count rides the ``kept`` materialization the same way, so a batch
-    costs the guard/signature materialization, the verify+count job and,
-    when committed, the index append (one write job over the cached
-    signatures). ``stats`` (optional out-param) receives ``n_kept`` so
-    callers that need the kept-row count skip a cached-scan job. With
+    ``stats`` (optional out-param) receives ``n_kept``; with
     ``commit=False`` it also receives ``sig``, the persisted signature
     frame, so a deferred append builds its entries without re-shingling
     (:func:`index_entries_minhash`); the caller then unpersists ``sig``
@@ -1199,7 +1330,8 @@ def dedup_minhash_against_index(
     """
     from pyspark.sql import Observation
 
-    log = logging.getLogger(__name__)
+    from dativo_ingest_spark.operators.util import index_append_partitions
+
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     num_bands, rem = divmod(num_hashes, rows_per_band)
@@ -1211,99 +1343,30 @@ def dedup_minhash_against_index(
         obs_total, F.count(F.lit(1)).alias("n")).persist()
     sig = _minhash_sig_frame(
         base, id_col, text_col, n, num_hashes, rows_per_band).persist()
-    keyed = sig.select("id", "_sig", F.explode("_keys").alias("_key"))
-    touched_keys = None
-    if max_cell_size is not None:
-        # sig is persisted, so the cell count is one cached pass; on a
-        # clean batch the join plans stay untouched. The same job
-        # materializes base (the observe() above yields n_total — no
-        # separate count job) and harvests the batch's distinct band
-        # keys for the index-scan prune below.
-        gstats: dict = {}
-        guarded = _without_hot_keys(
-            keyed, "_key", max_cell_size, stats=gstats,
-            collect_keys=_INLINE_TOUCHED_KEYS_LIMIT)
-        touched_keys = gstats.get("keys")
-        if guarded is not keyed:
-            log.warning(
-                "dedup_minhash_against_index: batch cells over "
-                "max_cell_size=%d excluded from scoring (their rows "
-                "admit un-deduped); raise rows_per_band or the cap",
-                max_cell_size)
-        keyed = guarded
-        n_total = _observed_count(obs_total, base)
-    else:
-        n_total = base.count()
-
-    a, b = keyed.alias("a"), keyed.alias("b")
-    est = _sig_agreement(F.col("a._sig"), F.col("b._sig"), num_hashes)
-    # evaluated exactly once, inside the kept materialization below (the
-    # after-batch counter rides that same job as an observe() metric, so
-    # no second consumer needs a persist here)
-    batch_losers = (
-        a.join(b, (F.col("a._key") == F.col("b._key"))
-               & (F.col("b.id") < F.col("a.id")))
-        .filter(est >= threshold)
-        .select(F.col("a.id").alias("id")).distinct()
-    )
-
-    if branch != "main" and index_table.current_version(branch) is None:
-        index_table.create_branch(branch)
-    head = index_table.snapshot(index_table.current_version(branch))
-    if head.files:
-        index = index_table.read(spark, branch=branch).select(
-            F.col("key").alias("_key"), F.col("sig").alias("_ix_sig"))
-        if touched_keys is not None:
-            # the guard job already resolved the batch's (non-hot) band
-            # keys: prune the index scan with one parsed IN predicate —
-            # a pushdown filter on the scan instead of a distinct
-            # aggregate + broadcast exchange over the cached signatures
-            index = index.filter(
-                _inline_key_filter("_key", touched_keys))
-        elif n_total * num_bands <= broadcast_limit:
-            index = index.join(
-                F.broadcast(keyed.select("_key").distinct()),
-                "_key", "left_semi")
-        iest = _sig_agreement(F.col("_sig"), F.col("_ix_sig"), num_hashes)
-        index_hits = (
-            keyed.join(index, "_key")
-            .filter(iest >= threshold)
-            .select("id").distinct()
-        )
-    else:
-        index_hits = local_df(spark, [], "id string").select(
-            F.col("id").cast(keyed.schema["id"].dataType).alias("id"))
-
-    obs_after = Observation()
-    after_batch = base.join(
-        batch_losers, base[id_col] == batch_losers["id"], "left_anti"
-    ).observe(obs_after, F.count(F.lit(1)).alias("n"))
-    kept = (
-        after_batch
-        .join(index_hits, base[id_col] == index_hits["id"], "left_anti")
-        .persist()
-    )
-    n_kept = kept.count()
-    n_after_batch = _observed_count(obs_after, after_batch)
-    n_batch_dups = n_total - n_after_batch
-    n_index_dups = n_after_batch - n_kept
-    if stats is not None:
-        stats["n_kept"] = n_kept
-    if commit and n_kept:
-        from dativo_ingest_spark.operators.util import (
-            index_append_partitions)
-
-        index_table.write_append(
-            index_entries_minhash(
-                sig, kept.select(F.col(id_col).alias("id")),
-                index_append_partitions(n_kept * num_bands)),
-            branch=branch)
-    base.unpersist()
-    if commit or stats is None:
-        sig.unpersist()
-    else:
+    hand_back = not commit and stats is not None
+    if hand_back:
         stats["sig"] = sig
-    return kept, n_batch_dups, n_index_dups
+
+    def score(p, q):
+        return _sig_agreement(F.col(f"{p}_sig"), F.col(f"{q}_sig"),
+                              num_hashes)
+
+    def entries(kept, n_kept):
+        return index_entries_minhash(
+            sig, kept.select(F.col(id_col).alias("id")),
+            index_append_partitions(n_kept * num_bands))
+
+    out = banded_against_index(
+        spark, base, obs_total,
+        sig.select("id", "_sig", F.explode("_keys").alias("_key")),
+        score, threshold, index_table, ["sig"], entries,
+        id_col=id_col, bands=num_bands, branch=branch, commit=commit,
+        max_cell_size=max_cell_size, stats=stats,
+        cap_hint="dedup_minhash_against_index: raise rows_per_band or "
+                 "max_cell_size")
+    if not hand_back:
+        sig.unpersist()
+    return out
 
 
 def index_entries_minhash(sig: DataFrame, ids: DataFrame,
@@ -1317,7 +1380,7 @@ def index_entries_minhash(sig: DataFrame, ids: DataFrame,
     (fewer than ``n`` words) gets no entry. The coalesce to ``num_files``
     (when given) sits BELOW the explode, on the semi-joined cached rows,
     so each write task evaluates the chain once instead of once per
-    parent partition (see similarity.dedup_embedding_against_index)."""
+    parent partition (see ingest_dedup.IngestDedup.index_entries)."""
     rows = sig.join(ids, "id", "left_semi")
     if num_files is not None:
         rows = rows.coalesce(num_files)

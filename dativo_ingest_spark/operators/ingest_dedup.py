@@ -3,7 +3,11 @@
 Mode ``exact | minhash | embedding`` picks the ``*_against_index``
 operator (``operators/dedup.py``, ``operators/similarity.py``); for
 ``embedding`` the index codec ``raw | pq | pq_residual`` picks what an
-index row stores. Three callers share the decision: the runner's
+index row stores. The two banded modes share one pipeline,
+``dedup.banded_against_index``: their operators only build the keyed
+batch frame and pass the Jaccard-estimate or cosine pair score, so a
+re-plan of the band-key filter, the index probe or the counters is one
+edit there. Three callers share the decision: the runner's
 ``target.options.dedup``, the streaming ``dedup_epoch_writer`` and the
 embedding operator's own inline commit. Each goes through
 :class:`IngestDedup`:
@@ -102,8 +106,8 @@ class IngestDedup:
         ``df``'s rows, sizes the append's file count; the coalesce sits
         below the entry-encode chain, so the write task evaluates the
         chain (and, for the PQ codecs, its Arrow Python runner) once, not
-        once per parent partition, serially (see
-        similarity.dedup_embedding_against_index for the measured 9x)."""
+        once per parent partition, serially: measured 9.3 s vs 1.0 s on a
+        500-row batch over 32 cached partitions."""
         parts = (None if n_rows is None else index_append_partitions(
             n_rows * self.entries_per_row()))
         if self.mode == "minhash":

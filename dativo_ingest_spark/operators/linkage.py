@@ -28,7 +28,7 @@ key and block sizes stay bounded. Two complementary blockers ship here:
 At 100 TB: both blockers are equi-joins on a derived key — one shuffle on
 the block key (or a broadcast when one side is small), with the same
 driver-resolved heavy-hitter guard the dedup inverted indexes use
-(``_without_hot_keys``) so a degenerate key (mass-duplicate name, stop
+(``without_hot_keys``) so a degenerate key (mass-duplicate name, stop
 token) can never go quadratic; the cut is surfaced in a ``stats``
 out-param, not just a log line. Verification (levenshtein / trigram
 Jaccard) runs JVM-side on the candidate set only.
@@ -105,7 +105,7 @@ def edit1_candidate_pairs(
     ``lev = levenshtein(left_val, right_val) <= 1`` guaranteed; one row
     per distinct (left, right) pair. The *right* side is the index: its
     variant frame is cached for the heavy-hitter guard's eager count
-    (the `_without_hot_keys` contract) and unpersisted before return.
+    (the `without_hot_keys` contract) and unpersisted before return.
 
     Completeness: two strings at edit distance 1 share a deletion variant
     whenever the edit position falls inside ``DELETION_VARIANT_CAP`` —
@@ -117,7 +117,7 @@ def edit1_candidate_pairs(
     from pyspark.sql import Observation
 
     from dativo_ingest_spark.operators.dedup import (_observed_count,
-                                                     _without_hot_keys)
+                                                     without_hot_keys)
 
     lv = left.select(
         F.col(left_id),
@@ -132,7 +132,7 @@ def edit1_candidate_pairs(
     ).observe(obs, F.count(F.lit(1)).alias("n")).persist()
     try:
         if max_block_size is not None:
-            rv_g = _without_hot_keys(rv, "_var", max_block_size, stats=stats)
+            rv_g = without_hot_keys(rv, "_var", max_block_size, stats=stats)
             # the guard job materialized rv; its row count rides it as an
             # observe() metric and picks the join strategy below
             n_var = _observed_count(obs, rv)
@@ -243,7 +243,7 @@ def token_block_pairs(
     standard single-key blocking recall trade; run multiple passes with
     different keys (or the edit1 index) to tighten.
     """
-    from dativo_ingest_spark.operators.dedup import _without_hot_keys
+    from dativo_ingest_spark.operators.dedup import without_hot_keys
 
     lb = rare_token_block_key(
         left.select(F.col(left_id), F.col(left_col).alias("left_val")),
@@ -253,8 +253,8 @@ def token_block_pairs(
         right_id, "right_val").persist()
     try:
         if max_block_size is not None:
-            rb_g = _without_hot_keys(rb, "block_key", max_block_size,
-                                     stats=stats)
+            rb_g = without_hot_keys(rb, "block_key", max_block_size,
+                                    stats=stats)
         else:
             rb_g = rb
         pairs = (

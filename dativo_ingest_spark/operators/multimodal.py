@@ -617,7 +617,7 @@ def dhash_neardup_pairs(hashes: DataFrame, max_dist: int = 3,
     the shuffle keys on 16-bit band values.
 
     Hot-band guard (the MinHash bucket guard ported —
-    operators/dedup.py:_without_hot_keys): band values span only 2^16,
+    operators/dedup.py:without_hot_keys): band values span only 2^16,
     so candidate pairs grow ~4*N^2/2^16 — fine at millions of images,
     degenerating toward all-pairs/16k at billions, and AQE splitting a
     hot partition cannot reduce the quadratic PAIR count within one
@@ -652,13 +652,13 @@ def dhash_neardup_pairs(hashes: DataFrame, max_dist: int = 3,
             F.shiftright("dhash_hi", 16).bitwiseAND(mask),
         )).alias("band", "bv"))
     if max_band_size is not None:
-        from dativo_ingest_spark.operators.dedup import _without_hot_keys
+        from dativo_ingest_spark.operators.dedup import without_hot_keys
 
         banded = (banded
                   .withColumn("cell", (F.col("band") * 65536
                                        + F.col("bv")).cast("long")))
-        banded = _without_hot_keys(banded, "cell", max_band_size,
-                                   stats=stats).drop("cell")
+        banded = without_hot_keys(banded, "cell", max_band_size,
+                                  stats=stats).drop("cell")
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (a.join(b, (F.col("a.band") == F.col("b.band"))

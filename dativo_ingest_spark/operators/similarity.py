@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dativo_ingest_spark.functions import vectors
+from dativo_ingest_spark.operators.dedup import (
+    MAX_CELL_SIZE_DEFAULT, banded_against_index, without_hot_keys)
 from dativo_ingest_spark.operators.util import local_df
 
 log = logging.getLogger(__name__)
@@ -133,19 +135,6 @@ def brute_force_topk(
     )
 
 
-#: above this many (row, band) keys the embedding index dedup skips the
-#: broadcast cell pre-filter and lets the scoring join shuffle both
-#: sides — band keys are short strings, so the default is generous.
-_INDEX_CELL_BROADCAST_LIMIT = 4_000_000
-
-#: default in-cell population cap for the embedding pair joins — one
-#: degenerate cell (zero vectors, boilerplate embeddings, a hot LSH band)
-#: otherwise concentrates a B²/2-pair task on ONE shuffle key. Expected
-#: cell size under corpus-scaled clustering is ~queries._SEMANTIC_CELL_SIZE
-#: (64), so the default only fires on pathological piles.
-MAX_CELL_SIZE_DEFAULT = 10_000
-
-
 def bucketed_neardup_pairs(
     df: DataFrame,
     id_col: str,
@@ -183,8 +172,6 @@ def bucketed_neardup_pairs(
     guard is off or nothing was hot), so callers can detect the recall
     cut programmatically instead of scraping the warning log.
     """
-    from dativo_ingest_spark.operators.dedup import _without_hot_keys
-
     side = df.select(
         F.col(bucket_col).alias("bucket"),
         F.col(id_col).alias("id"),
@@ -195,8 +182,8 @@ def bucketed_neardup_pairs(
         stats["skipped_cells"] = 0
     if max_bucket_size is not None:
         cut_stats: dict = {}
-        guarded = _without_hot_keys(side, "bucket", max_bucket_size,
-                                    stats=cut_stats)
+        guarded = without_hot_keys(side, "bucket", max_bucket_size,
+                                   stats=cut_stats)
         if stats is not None:
             stats["skipped_cells"] = cut_stats.get("hot_keys", 0)
         if guarded is not side:
@@ -536,51 +523,26 @@ def dedup_embeddings_against_index(
     corpus has already (approximately) seen, then record the survivors —
     the semantic-similarity twin of ``dedup.dedup_against_index`` (which
     catches exact text; this catches paraphrases/re-encodes sharing a
-    high-cosine embedding).
+    high-cosine embedding). Runs ``dedup.banded_against_index``, which
+    states the job shape, the crash contract and the return values.
 
-    The historical corpus is represented ONLY by its banded cell index
-    (``bands`` rows per admitted document: band key + vector + norm), so
-    per batch the cost is: one batch scan computing keys/norms, a
-    within-batch cell self-join, and a (cell-key) equi-join against the
-    index — candidates are scored inside matching cells only, never
-    all-pairs, and history is never rescanned. Within-batch semantics are
-    one-pass lower-id-wins (any row with a smaller-id near-duplicate in
-    the same batch drops — MinHash-dedup convention). With
-    ``commit=True`` the survivors' index rows append atomically AFTER the
-    filter, so a crash re-admits rather than loses; replaying the same
-    batch then drops its rows against the committed entries (each row now
-    has an exact-equal index entry — caught by construction).
+    An index row is one band key (:func:`sign_band_keys`) plus the vector
+    and its norm (``bands`` rows per admitted document). Recall is
+    probabilistic for NEAR (not exact) duplicates: a pair is scored only
+    if some band's comparison pattern matches — raise ``bands`` (index
+    grows linearly) or lower ``band_width`` (hotter cells) to trade recall
+    against cost. Zero/NULL-norm vectors never match (cosine undefined —
+    kept, documented). Rows sharing an id are neither deduped against
+    each other nor collapsed — run the exact twin (or a keyed
+    dropDuplicates) first if the source can repeat ids.
 
-    Recall is probabilistic for NEAR (not exact) duplicates: a pair is
-    scored only if some band's comparison pattern matches — raise
-    ``bands`` (index grows linearly) or lower ``band_width`` (hotter
-    cells) to trade recall against cost. Zero/NULL-norm vectors never
-    match (cosine undefined — kept, documented). Ids are assumed UNIQUE
-    within the batch (the loser rule keys on id): rows sharing an id are
-    neither deduped against each other nor collapsed — run the exact
-    twin (or a keyed dropDuplicates) first if the source can repeat ids.
-    Returns ``(kept_df, n_batch_dups, n_index_dups)`` — row counts, with
-    ``kept_df`` persisted (caller unpersists when done), original batch
-    schema. ``stats`` (optional out-param) receives ``n_kept`` so
-    callers that need the kept-row count skip an extra (cached-scan)
-    count job; the batch-size and after-batch counters ride the guard
-    and verify jobs as ``observe()`` metrics (r15) — a committed batch
-    is three jobs, not six.
-
-    100 TB shape: everything shuffles on the band key; the index is
-    ``bands ×`` the admitted corpus in (key, vec, norm) rows — compact
-    relative to documents, and the thing that joins. ``max_cell_size``
-    (default on) excludes batch cells above the cap from BOTH scoring
-    joins — a pathological pile (zero vectors, one boilerplate embedding
-    repeated across the batch) would otherwise put a quadratic in-cell
-    task on one shuffle key; skipped rows are admitted un-deduped
-    (recall-only effect, logged). SIZE THE BANDS TO THE CORPUS: the
-    default ``band_width=8`` yields 256 cells per band — an sf0.1
-    default, NOT a 100 TB one, since each batch row scores against
-    ~N_index/2^band_width rows per band. Grow ``band_width`` ≈
-    log2(N_index / target_cell) (e.g. 20 bits ≈ 1M cells/band for a
-    billion-row index) so per-band cells stay constant-sized; wider
-    bands trade near-dup recall, which ``bands`` buys back linearly.
+    SIZE THE BANDS TO THE CORPUS: the default ``band_width=8`` yields 256
+    cells per band — an sf0.1 default, NOT a 100 TB one, since each batch
+    row scores against ~N_index/2^band_width rows per band. Grow
+    ``band_width`` ≈ log2(N_index / target_cell) (e.g. 20 bits ≈ 1M
+    cells/band for a billion-row index) so per-band cells stay
+    constant-sized; wider bands trade near-dup recall, which ``bands``
+    buys back linearly.
 
     ``index_codec="pq"`` (r11 verdict Next #5 — the FAISS storage leg):
     the persistent index stores PQ CODES instead of raw vectors
@@ -618,6 +580,10 @@ def dedup_embeddings_against_index(
                          "ivfpq_train_artifact dict")
     from pyspark.sql import Observation
 
+    from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
+    from dativo_ingest_spark.operators.quantization import (
+        pq_reconstruct, pq_reconstruct_residual)
+
     obs_total = Observation()
     staged = batch.withColumn(
         "_vec", vectors.as_double_array(F.col(vec_col)))
@@ -626,172 +592,41 @@ def dedup_embeddings_against_index(
         "_keys", sign_band_keys(F.col("_vec"), bands, band_width)
     ).observe(obs_total, F.count(F.lit(1)).alias("n")).persist()
 
-    keyed = staged.select(
-        F.col(id_col).alias("id"), "_vec", "_norm",
-        F.explode("_keys").alias("_key"),
-    )
-    touched_keys = None
-    if max_cell_size is not None:
-        from dativo_ingest_spark.operators.dedup import (
-            _INLINE_TOUCHED_KEYS_LIMIT, _without_hot_keys)
+    def score(p, q):
+        return _pair_cosine(f"{p}_vec", f"{q}_vec", f"{p}_norm", f"{q}_norm")
 
-        # staged is persisted above, so the cell-size count is one cached
-        # pass; on a clean batch the joins' plans stay untouched. The
-        # same job materializes staged (the observe() above yields
-        # n_total — no separate count job) and harvests the batch's
-        # distinct cell keys for the index-scan prune below.
-        gstats: dict = {}
-        guarded = _without_hot_keys(
-            keyed, "_key", max_cell_size, stats=gstats,
-            collect_keys=_INLINE_TOUCHED_KEYS_LIMIT)
-        touched_keys = gstats.get("keys")
-        if guarded is not keyed:
-            log.warning(
-                "dedup_embeddings_against_index: batch cells over "
-                "max_cell_size=%d excluded from scoring (their rows admit "
-                "un-deduped); widen band_width or raise the cap",
-                max_cell_size)
-        keyed = guarded
-        from dativo_ingest_spark.operators.dedup import _observed_count
-
-        n_total = _observed_count(obs_total, staged)
-    else:
-        n_total = staged.count()
-    cos = _pair_cosine("a._vec", "b._vec", "a._norm", "b._norm")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    # evaluated exactly once, inside the kept materialization below (the
-    # after-batch counter rides that same job as an observe() metric, so
-    # no second consumer needs a persist here)
-    batch_losers = (
-        a.join(b, (F.col("a._key") == F.col("b._key"))
-               & (F.col("b.id") < F.col("a.id")))
-        .filter(cos >= threshold)
-        .select(F.col("a.id").alias("id")).distinct()
-    )
-
-    if branch != "main" and index_table.current_version(branch) is None:
-        index_table.create_branch(branch)
-    head = index_table.snapshot(index_table.current_version(branch))
-    if head.files:
-        if index_codec == "pq_residual":
-            index = index_table.read(spark, branch=branch).select(
-                F.col("id").alias("_ix_id"), F.col("key").alias("_key"),
-                F.col("cell").alias("_ix_cell"),
-                F.col("codes").alias("_ix_codes"),
-                F.col("norm").alias("_ix_norm"))
-        elif index_codec == "pq":
-            index = index_table.read(spark, branch=branch).select(
-                F.col("id").alias("_ix_id"), F.col("key").alias("_key"),
-                F.col("codes").alias("_ix_codes"),
-                F.col("norm").alias("_ix_norm"))
-        else:
-            index = index_table.read(spark, branch=branch).select(
-                F.col("id").alias("_ix_id"), F.col("key").alias("_key"),
-                F.col("vec").alias("_ix_vec"),
-                F.col("norm").alias("_ix_norm"))
-        # prune the index to the cells this batch actually touches BEFORE
-        # the scoring join, so the big index is never shuffled — only the
-        # touched slice (bounded by batch cells x per-cell population)
-        # enters the exchange. When the hot-cell guard's aggregate
-        # already harvested the batch's keys, the prune inlines as ONE
-        # parsed IN predicate (a pushdown filter on the index scan — no
-        # distinct aggregate, no broadcast exchange); else the distinct
-        # keys broadcast into a semi filter. Same O(batch)-exchange
-        # contract as dedup.index_anti_join.
-        if touched_keys is not None:
-            from dativo_ingest_spark.operators.dedup import (
-                _inline_key_filter)
-
-            index = index.filter(_inline_key_filter("_key", touched_keys))
-        elif n_total * bands <= _INDEX_CELL_BROADCAST_LIMIT:
-            index = index.join(
-                F.broadcast(keyed.select("_key").distinct()),
-                "_key", "left_semi")
+    def decode(index):
+        # the codecs' reconstruction x̂ (coarse centroid + residual for
+        # pq_residual), scored with the STORED true norm
         if index_codec == "pq":
-            # decode AFTER the semi prune: only the touched slice pays
-            # the m-lookup reconstruction; the codes column never enters
-            # the scoring exchange
-            from dativo_ingest_spark.operators.quantization import (
-                pq_reconstruct)
+            vec = pq_reconstruct(F.col("_ix_codes"), codebooks, scale)
+        else:
+            vec = pq_reconstruct_residual(
+                F.col("_ix_cell"), F.col("_ix_codes"), artifact["cells"],
+                artifact["codebooks"], int(artifact["scale"]))
+        return index.withColumn("_ix_vec", vec).drop("_ix_codes",
+                                                     "_ix_cell")
 
-            index = index.withColumn(
-                "_ix_vec",
-                pq_reconstruct(F.col("_ix_codes"), codebooks, scale)
-            ).drop("_ix_codes")
-        elif index_codec == "pq_residual":
-            # same post-prune decode discipline; reconstruction =
-            # coarse centroid + decoded residual, all plan literals
-            from dativo_ingest_spark.operators.quantization import (
-                pq_reconstruct_residual)
-
-            index = index.withColumn(
-                "_ix_vec",
-                pq_reconstruct_residual(
-                    F.col("_ix_cell"), F.col("_ix_codes"),
-                    artifact["cells"], artifact["codebooks"],
-                    int(artifact["scale"]))
-            ).drop("_ix_codes", "_ix_cell")
-        icos = _pair_cosine("_vec", "_ix_vec", "_norm", "_ix_norm")
-        index_hits = (
-            keyed.join(index, "_key")
-            .filter(icos >= threshold)
-            .select("id").distinct()
-        )
-    else:
-        index_hits = local_df(spark, [], "id string").select(
-            F.col("id").cast(keyed.schema["id"].dataType).alias("id"))
-
-    obs_after = Observation()
-    after_batch = staged.join(
-        batch_losers, staged[id_col] == batch_losers["id"], "left_anti"
-    ).observe(obs_after, F.count(F.lit(1)).alias("n"))
-    # persist the frame we RETURN (post-drop of the staging columns) —
-    # persisting a parent and returning a child would make the caller's
-    # unpersist() a no-op and leak a cache entry per call; the commit
-    # below recomputes keys/norms from the cached kept rows (deterministic
-    # expressions — identical to what the joins filtered on)
-    kept = (
-        after_batch
-        .join(index_hits, staged[id_col] == index_hits["id"], "left_anti")
-        .drop("_vec", "_norm", "_keys")
-        .persist()
-    )
-    # row-accurate counters (an id-keyed count would miscount if a loser
-    # id covered several rows): n_kept's PARALLEL count materializes the
-    # kept cache (r14 note: folding it into the commit write was MEASURED
-    # SLOWER — the cache then materializes serially inside the
-    # single-task coalesce), and the after-batch count rides that same
-    # job as an observe() metric on the anti-join's output instead of a
-    # second cached-scan job.
-    from dativo_ingest_spark.operators.dedup import _observed_count
-
-    n_kept = kept.count()
-    n_after_batch = _observed_count(obs_after, after_batch)
-    n_batch_dups = n_total - n_after_batch
-    n_index_dups = n_after_batch - n_kept
-    if stats is not None:
-        stats["n_kept"] = n_kept
-    if commit and n_kept:
-        # coalesced append: see dedup.dedup_against_index — avoids one
-        # near-empty index file per shuffle partition per batch. The
-        # coalesce goes on the INPUT, not the computed entries: a
-        # coalesce above the encode chain makes the single write task
-        # evaluate one ArrowEvalPython/expression chain PER PARENT
-        # partition (a fresh Python runner each, serially — measured
-        # 9.3 s vs 1.0 s on a 500-row batch over 32 cached partitions),
-        # while coalescing the cached kept rows first runs the chain
-        # once per output file. Per-task encode work stays bounded by
-        # INDEX_APPEND_ROWS_PER_FILE entry rows.
-        from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
-
-        entries = IngestDedup("embedding", id_col, vec_col, {
+    def entries(kept, n_kept):
+        return IngestDedup("embedding", id_col, vec_col, {
             "bands": bands, "band_width": band_width,
             "index_codec": index_codec, "codebooks": codebooks,
             "scale": scale, "artifact": artifact}).index_entries(
                 kept, n_rows=n_kept)
-        index_table.write_append(entries, branch=branch)
-    staged.unpersist()
-    return kept, n_batch_dups, n_index_dups
+
+    return banded_against_index(
+        spark, staged, obs_total,
+        staged.select(F.col(id_col).alias("id"), "_vec", "_norm",
+                      F.explode("_keys").alias("_key")),
+        score, threshold, index_table, {
+            "raw": ["vec", "norm"], "pq": ["codes", "norm"],
+            "pq_residual": ["cell", "codes", "norm"]}[index_codec], entries,
+        id_col=id_col, bands=bands, branch=branch, commit=commit,
+        max_cell_size=max_cell_size, stats=stats,
+        cap_hint="dedup_embeddings_against_index: widen band_width or "
+                 "raise max_cell_size",
+        drop=("_vec", "_norm", "_keys"),
+        decode=None if index_codec == "raw" else decode)
 
 
 def index_entries(

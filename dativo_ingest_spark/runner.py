@@ -246,6 +246,18 @@ def _merge_keys(options: dict) -> list[str]:
     return [k.strip() for k in str(raw).split(",") if k.strip()]
 
 
+def _newest_per_key(df, keys: list[str], cursor_field: str | None):
+    """One row per merge key, the newest cursor version: the ``>=``
+    re-read boundary row and a later update of the same key land in one
+    batch, and both merge sinks take each update row verbatim. Without a
+    cursor column the batch passes unchanged."""
+    if not cursor_field or cursor_field not in df.columns:
+        return df
+    newest = Window.partitionBy(*keys).orderBy(F.col(cursor_field).desc())
+    return (df.withColumn("_dativo_rank", F.row_number().over(newest))
+            .filter("_dativo_rank = 1").drop("_dativo_rank"))
+
+
 def run_job(
     spark: SparkSession,
     job: JobConfig,
@@ -294,11 +306,24 @@ def _run_job(spark, job, state_root, classification_overrides,
         raise ConfigError(
             "target.options.commit must be hive, table or iceberg, got "
             f"{commit_mode!r}")
+    merge_keys = _merge_keys(job.target.options)
+    if write_mode == "merge" and commit_mode != "hive" and not merge_keys:
+        raise ConfigError("target.options.mode=merge needs merge_keys")
     if write_mode == "rollup":
         if commit_mode != "table":
             raise ConfigError(
                 "target.options.mode=rollup requires commit: table "
                 "(the snapshot-commit sink holds the rollup state)")
+        rconf = dict(job.target.options.get("rollup") or {})
+        rkeys = list(rconf.get("keys") or [])
+        rmeasures = {
+            str(name): (str(spec[0]), str(spec[1]))
+            for name, spec in dict(rconf.get("measures") or {}).items()
+        }
+        if not rkeys or not rmeasures:
+            raise ConfigError(
+                "target.options.mode=rollup needs rollup.keys and "
+                "rollup.measures ({name: [op, column]})")
         if not (job.source.incremental.enabled
                 and job.source.incremental.cursor_field):
             raise ConfigError(
@@ -312,10 +337,15 @@ def _run_job(spark, job, state_root, classification_overrides,
             raise ConfigError(
                 "target.options.mode=scd2 requires commit: table (the "
                 "snapshot-commit sink holds the dimension history)")
-        _sc = dict(job.target.options.get("scd2") or {})
-        _sts = _sc.get("ts_field")
-        if _sts and (_sts in (_sc.get("tracked") or [])
-                     or _sts in (_sc.get("keys") or [])):
+        sconf = dict(job.target.options.get("scd2") or {})
+        skeys = list(sconf.get("keys") or [])
+        stracked = list(sconf.get("tracked") or [])
+        sts = sconf.get("ts_field")
+        if not skeys or not stracked or not sts:
+            raise ConfigError(
+                "target.options.mode=scd2 needs scd2.keys, "
+                "scd2.tracked and scd2.ts_field")
+        if sts in stracked or sts in skeys:
             raise ConfigError(
                 "scd2.ts_field must not appear in scd2.keys or "
                 "scd2.tracked (it becomes the version interval boundary, "
@@ -784,6 +814,8 @@ def _run_job(spark, job, state_root, classification_overrides,
             dedup_dropped=dedup_dropped,
         ))
 
+    # the merge and rollup folds key their >= re-read handling on it
+    cursor_field = inc.cursor_field if inc.enabled else None
     if table is not None:
         # branch-per-tenant (the reference's Nessie default: branch =
         # tenant_id, contracts.TargetConfig.from_dict) — created at the
@@ -791,31 +823,16 @@ def _run_job(spark, job, state_root, classification_overrides,
         branch = job.target.branch or "main"
         if branch != "main" and table.current_version(branch) is None:
             table.create_branch(branch)
-        # the merge and rollup folds key their >= re-read handling on it
-        cursor_field = inc.cursor_field if inc.enabled else None
         if write_mode == "merge":
             # idempotent upsert for the >= cursor re-read: the staged batch
             # merges by key through the copy-on-write path (manifest-stats
             # pruning keeps the rewrite to the files that can hold the
             # keys); the plain stage becomes redundant after the merge's
             # own committed stage and is swept
-            merge_keys = _merge_keys(job.target.options)
-            if not merge_keys:
-                raise ConfigError(
-                    "target.options.mode=merge needs merge_keys")
-            updates = spark.read.parquet(stage)
-            if cursor_field and cursor_field in updates.columns:
-                # the >= re-read boundary row and a later update of the
-                # same key land in one batch: keep the newest version per
-                # key, since merge_upsert writes every update row verbatim
-                newest = Window.partitionBy(*merge_keys).orderBy(
-                    F.col(cursor_field).desc())
-                updates = (updates
-                           .withColumn("_dativo_rank",
-                                       F.row_number().over(newest))
-                           .filter("_dativo_rank = 1").drop("_dativo_rank"))
             table.merge_upsert(
-                spark, updates, merge_keys,
+                spark, _newest_per_key(spark.read.parquet(stage),
+                                       merge_keys, cursor_field),
+                merge_keys,
                 branch=branch,
                 stats_columns=sorted({*merge_keys, *pcols}),
                 properties=props,
@@ -831,16 +848,6 @@ def _run_job(spark, job, state_root, classification_overrides,
             # never a history rescan. Query it with rollup.finalize.
             from dativo_ingest_spark.operators import rollup as rollup_mod
 
-            rconf = dict(job.target.options.get("rollup") or {})
-            rkeys = list(rconf.get("keys") or [])
-            rmeasures = {
-                str(name): (str(spec[0]), str(spec[1]))
-                for name, spec in dict(rconf.get("measures") or {}).items()
-            }
-            if not rkeys or not rmeasures:
-                raise ConfigError(
-                    "target.options.mode=rollup needs rollup.keys and "
-                    "rollup.measures ({name: [op, column]})")
             head = table.snapshot(table.current_version(branch))
             batch = spark.read.parquet(stage)
             # The >= cursor predicate re-reads the boundary row by design
@@ -892,7 +899,7 @@ def _run_job(spark, job, state_root, classification_overrides,
                     # bounded collect: limit(cap+1) caps driver memory in
                     # the degenerate case the cap exists for (a coarse
                     # cursor putting a huge batch on one value) — the
-                    # same discipline as dedup._without_hot_keys
+                    # same discipline as dedup.without_hot_keys
                     fps = sorted(
                         r["fp"] for r in batch
                         .filter(F.col(cursor_field) == F.lit(new_max))
@@ -939,14 +946,6 @@ def _run_job(spark, job, state_root, classification_overrides,
             # re-read is harmless here, unlike rollup's additive state.
             from dativo_ingest_spark.operators import scd as scd_mod
 
-            sconf = dict(job.target.options.get("scd2") or {})
-            skeys = list(sconf.get("keys") or [])
-            stracked = list(sconf.get("tracked") or [])
-            sts = sconf.get("ts_field")
-            if not skeys or not stracked or not sts:
-                raise ConfigError(
-                    "target.options.mode=scd2 needs scd2.keys, "
-                    "scd2.tracked and scd2.ts_field")
             stie = sconf.get("tiebreaker")
             scollapse = bool(sconf.get("collapse_unchanged", True))
             batch = spark.read.parquet(stage).select(
@@ -980,9 +979,12 @@ def _run_job(spark, job, state_root, classification_overrides,
     elif commit_mode == "iceberg":
         from dativo_ingest_spark.sinks import iceberg_sink
 
-        merge_keys = _merge_keys(job.target.options)
+        staged = spark.read.parquet(stage)
+        if write_mode == "merge":
+            # MERGE INTO allows one source row per target row
+            staged = _newest_per_key(staged, merge_keys, cursor_field)
         iceberg_sink.commit(
-            spark, spark.read.parquet(stage), job.target.table,
+            spark, staged, job.target.table,
             mode=write_mode,
             branch=job.target.branch,
             partition_by=pcols,

@@ -583,6 +583,9 @@ def shard_epoch_writer(out_dir: str, id_col: str, token_col: str,
         if not batch_df.isEmpty():
             from pyspark.sql import Observation
 
+            from dativo_ingest_spark.operators.dedup import (
+                observation_or_none)
+
             h = _shard_hash(id_col, seed)
             staged = batch_df.select(
                 F.col(id_col).alias("id"),
@@ -620,16 +623,16 @@ def shard_epoch_writer(out_dir: str, id_col: str, token_col: str,
                 writer.json(epoch_dir)
             else:
                 writer.option("compression", "snappy").parquet(epoch_dir)
-            try:
-                got = obs.get
+            got = observation_or_none(
+                obs, "recounting the epoch's shards from its files")
+            if got is not None:
                 stats = [
                     {"shard": k, "n_rows": int(got[f"r{k}"]),
                      "n_tokens": int(got[f"t{k}"]),
                      "hash_sum": int(got[f"h{k}"])}
                     for k in range(n_shards) if int(got[f"r{k}"])]
-            except Exception:  # noqa: BLE001 — CollectMetrics folded
-                # away over a driver-local batch frame: recount from the
-                # epoch's files (the pre-r15 read-back), exact either way
+            else:
+                # the pre-r15 read-back: exact either way
                 if fmt == "jsonl":
                     back = (spark.read
                             .schema(staged.drop("shard").schema)

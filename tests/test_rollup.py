@@ -239,6 +239,8 @@ class TestRollupTargetMode:
         from dativo_ingest_spark.config.contracts import (ConfigError,
                                                           JobConfig)
 
+        from tests.test_widen import _next_job_id
+
         src = str(tmp_path / "src")
         _frame(spark).withColumn(
             "cursor", F.col("id")).write.parquet(src)
@@ -246,6 +248,16 @@ class TestRollupTargetMode:
         del cfg["target"]["options"]["rollup"]
         with _pytest.raises(ConfigError):
             runner.run_job(spark, JobConfig.from_dict(cfg))
+        # with the cursor the other preflight checks need, the missing
+        # rollup spec still raises at startup: no job, no staged file
+        cfg = self._cfg(src, str(tmp_path / "tbl"), incremental={
+            "enabled": True, "cursor_field": "cursor"})
+        del cfg["target"]["options"]["rollup"]
+        before = _next_job_id(spark)
+        with _pytest.raises(ConfigError, match="rollup.keys"):
+            runner.run_job(spark, JobConfig.from_dict(cfg))
+        assert _next_job_id(spark) == before
+        assert not list((tmp_path / "tbl").rglob("*.parquet"))
 
     def test_mode_commit_mismatch_is_config_error(self, spark, tmp_path):
         import pytest as _pytest

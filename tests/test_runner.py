@@ -522,17 +522,33 @@ def test_table_commit_merge_mode_keeps_newest_boundary_version(
         1: ("alice", 10), 2: ("robert", 30), 3: ("carol", 25)}
 
 
+def _raises_before_any_data(spark, d, table_root, match):
+    """run_job raises ConfigError at startup: no Spark job ran and no
+    parquet file landed under the table."""
+    from tests.test_widen import _next_job_id
+
+    before = _next_job_id(spark)
+    with pytest.raises(ConfigError, match=match):
+        runner.run_job(spark, JobConfig.from_dict(d))
+    assert _next_job_id(spark) == before
+    assert not list(table_root.rglob("*.parquet"))
+
+
 def test_table_commit_merge_mode_requires_keys(spark, tmp_path):
     src = tmp_path / "p.csv"
     src.write_text("id,name,active\n1,a,true\n")
     d = job_dict(str(src), str(tmp_path / "t"))
     d["target"]["options"] = {"mode": "merge", "commit": "table"}
-    import pytest as _pytest
+    _raises_before_any_data(spark, d, tmp_path / "t", "merge_keys")
 
-    from dativo_ingest_spark.config.contracts import ConfigError
 
-    with _pytest.raises(ConfigError):
-        runner.run_job(spark, JobConfig.from_dict(d))
+def test_table_commit_scd2_mode_requires_config(spark, tmp_path):
+    src = tmp_path / "p.csv"
+    src.write_text("id,name,active\n1,a,true\n")
+    d = job_dict(str(src), str(tmp_path / "t"))
+    d["target"]["options"] = {"mode": "scd2", "commit": "table",
+                              "scd2": {"keys": ["id"]}}
+    _raises_before_any_data(spark, d, tmp_path / "t", "scd2.tracked")
 
 
 # --- real-Iceberg commit path (config-gated; no jar in this env) ----------
@@ -596,6 +612,47 @@ def test_iceberg_commit_path_selected_with_mocked_catalog(
     # staging swept after commit
     assert not list((tmp_path / "out" / "_staging").glob("*")) \
         if (tmp_path / "out" / "_staging").exists() else True
+
+
+def test_iceberg_merge_hands_newest_version_per_key(
+        spark, tmp_path, monkeypatch):
+    """A cursor batch holding two versions of one key reaches the mocked
+    MERGE INTO as one row per key, the newest by cursor: MERGE allows one
+    source row per target row."""
+    from dativo_ingest_spark.sinks import iceberg_sink
+
+    recorded = {}
+
+    def fake_commit(spark_, df, table_ident, mode="append", branch=None,
+                    partition_by=None, properties=None, merge_keys=None):
+        recorded.update(mode=mode, merge_keys=merge_keys, rows=sorted(
+            tuple(r) for r in df.select("id", "name", "cursor").collect()))
+
+    monkeypatch.setattr(iceberg_sink, "commit", fake_commit)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "alice", 10), (2, "bob", 20), (2, "robert", 30)],
+        "id bigint, name string, cursor bigint").write.parquet(src)
+    d = job_dict(src, str(tmp_path / "out"),
+                 incremental={"enabled": True, "cursor_field": "cursor"})
+    d["source"]["type"] = "parquet"
+    d["target"]["table"] = "lakehouse.db.people"
+    d["target"]["options"] = {"mode": "merge", "commit": "iceberg",
+                              "merge_keys": "id"}
+    d["asset"]["schema"] = [
+        {"name": "id", "type": "integer", "required": True},
+        {"name": "name", "type": "string", "required": True},
+        {"name": "cursor", "type": "integer", "required": True},
+    ]
+    spark.conf.set("spark.sql.catalog.lakehouse", "fake.CatalogImpl")
+    try:
+        res = runner.run_job(spark, JobConfig.from_dict(d),
+                             state_root=str(tmp_path / "state"))
+    finally:
+        spark.conf.unset("spark.sql.catalog.lakehouse")
+    assert res.exit_code == runner.EXIT_SUCCESS and res.records_in == 3
+    assert recorded == {"mode": "merge", "merge_keys": ["id"],
+                        "rows": [(1, "alice", 10), (2, "robert", 30)]}
 
 
 def test_iceberg_strict_abort_never_reaches_commit(

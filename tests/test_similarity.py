@@ -368,15 +368,19 @@ class TestCellSizeGuards:
             [("d3", [x * 1.5 for x in base]), ("d4", [1.0] * 16)],
             "doc_id string, embedding array<double>")
 
+        from dativo_ingest_spark.operators import dedup
+
         results = []
+        # without the cell guard no key list is harvested, so the limit
+        # picks between the broadcast prune and the plain shuffle join
         for name, limit in [("bcast", 4_000_000), ("shuffle", 0)]:
-            monkeypatch.setattr(similarity, "_INDEX_CELL_BROADCAST_LIMIT",
-                                limit)
+            monkeypatch.setattr(dedup, "_INDEX_BROADCAST_LIMIT", limit)
             t = FsTable.create(str(tmp_path / f"ix_{name}"))
             similarity.dedup_embeddings_against_index(
                 spark, b1, "doc_id", "embedding", t, threshold=0.95)
             kept, n_b, n_i = similarity.dedup_embeddings_against_index(
-                spark, b2, "doc_id", "embedding", t, threshold=0.95)
+                spark, b2, "doc_id", "embedding", t, threshold=0.95,
+                max_cell_size=None)
             results.append((sorted(r.doc_id for r in kept.collect()),
                             n_b, n_i))
             kept.unpersist()

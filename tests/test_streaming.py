@@ -1080,6 +1080,58 @@ class TestShardEpochWriter:
                for k, v in man["shards"].items()}
         assert got == exp
 
+    def test_folded_observation_recounts_loudly(self, spark, tmp_path,
+                                                monkeypatch, caplog):
+        """A driver-local epoch keeps its observe() metrics on this Spark
+        build, so the folded-CollectMetrics result (a JVM AssertionError
+        from ``Observation.get``) is injected: the shard stats are then
+        recounted from the epoch's files, exactly, with one warning. Any
+        other error from the observation propagates."""
+        import json
+        import logging
+
+        from py4j.protocol import Py4JJavaError
+        from pyspark.sql import Observation
+
+        from dativo_ingest_spark.sinks.shard_export import (
+            export_training_shards)
+
+        exp = {str(r.shard): (r.n_rows, r.n_tokens, r.hash_sum)
+               for r in export_training_shards(
+                   self._mk(spark, range(150)), "doc_id", "n_tokens",
+                   str(tmp_path / "batch"), n_shards=4).collect()}
+
+        def shards(name):
+            out = str(tmp_path / name)
+            pipeline.shard_epoch_writer(
+                out, "doc_id", "n_tokens", n_shards=4, query_id="q1")(
+                    self._mk(spark, range(150)), 0)
+            man = json.load(open(f"{out}/manifest.json"))
+            return {k: (v["n_rows"], v["n_tokens"], v["hash_sum"])
+                    for k, v in man["shards"].items()}
+
+        def warnings():
+            return [r for r in caplog.records
+                    if "optimized away" in r.getMessage()]
+
+        caplog.set_level(logging.WARNING)
+        assert shards("observed") == exp and not warnings()
+
+        def raising(java_error):
+            def get(self):
+                raise Py4JJavaError("observation failed",
+                                    java_error("folded"))
+            return property(get)
+
+        jvm = spark.sparkContext._jvm
+        monkeypatch.setattr(Observation, "get",
+                            raising(jvm.java.lang.AssertionError))
+        assert shards("folded") == exp and len(warnings()) == 1
+        monkeypatch.setattr(Observation, "get",
+                            raising(jvm.java.lang.IllegalStateException))
+        with pytest.raises(Py4JJavaError):
+            shards("other_error")
+
     def test_real_stream_availablenow(self, spark, tmp_path):
         import json
 
