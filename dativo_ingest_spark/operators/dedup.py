@@ -987,9 +987,7 @@ def dedup_against_index(
         F.count(F.when(F.col("_rk") == 1, 1)).alias("surv")).collect()[0]
     n_total = int(_tc["n"])
     n_survivors = int(_tc["surv"])
-    if branch != "main" and index_table.current_version(branch) is None:
-        index_table.create_branch(branch)
-    head = index_table.snapshot(index_table.current_version(branch))
+    head = index_table.head(branch)
     if head.files:
         index = index_table.read(spark, branch=branch).select("fingerprint")
         if n_total <= broadcast_batch_limit:
@@ -1212,9 +1210,7 @@ def banded_against_index(spark, base: DataFrame, obs_total,
         .select(F.col("a.id").alias("id")).distinct()
     )
 
-    if branch != "main" and index_table.current_version(branch) is None:
-        index_table.create_branch(branch)
-    head = index_table.snapshot(index_table.current_version(branch))
+    head = index_table.head(branch)
     if head.files:
         index = index_table.read(spark, branch=branch).select(
             F.col("key").alias("_key"),

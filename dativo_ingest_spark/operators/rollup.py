@@ -140,14 +140,32 @@ def maintain_rollup(
     """One maintenance step: fold a new raw batch into the rollup state.
 
     ``base_state`` is the persisted state table (None on first batch).
-    Returns the NEW state frame — write it back via the snapshot-commit
-    sink (sinks/table_commit.py) so readers flip atomically between
-    consistent states; ``finalize`` serves queries from it.
+    Returns the NEW state frame (:func:`commit_rollup` writes it back to
+    a snapshot-commit table); ``finalize`` serves queries from it.
     """
     delta = partial_state(batch, keys, measures)
     if base_state is None:
         return delta
     return merge_states([base_state, delta], keys)
+
+
+def commit_rollup(
+    table,
+    batch: DataFrame,
+    keys: Sequence[str],
+    measures: Mapping[str, tuple[str, str]],
+    branch: str = "main",
+    properties: dict[str, str] | None = None,
+):
+    """Fold a raw batch into the rollup state an FsTable holds
+    (:func:`maintain_rollup`) and commit the new state as one overwrite
+    snapshot carrying ``properties``, so readers flip atomically between
+    consistent states. Returns the committed snapshot."""
+    base = (table.read(batch.sparkSession, branch=branch)
+            if table.head(branch).files else None)
+    return table.write_append(
+        maintain_rollup(base, batch, keys, measures), branch=branch,
+        operation="overwrite", properties=properties)
 
 
 def maintain_rollup_from_changes(

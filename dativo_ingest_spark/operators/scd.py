@@ -141,6 +141,34 @@ def scd2_merge(
     return untouched.unionByName(rebuilt)
 
 
+def commit_scd2(
+    table,
+    batch: DataFrame,
+    keys: Sequence[str],
+    ts_col: str,
+    tracked: Sequence[str],
+    branch: str = "main",
+    tiebreaker: str | None = None,
+    collapse_unchanged: bool = True,
+    properties: dict[str, str] | None = None,
+):
+    """Fold a changelog batch into the SCD2 dimension an FsTable holds
+    (:func:`scd2_merge`, or :func:`scd2_from_changelog` while the table
+    is empty) and commit the new dimension as one overwrite snapshot
+    carrying ``properties``. Returns the committed snapshot."""
+    if table.head(branch).files:
+        new_dim = scd2_merge(
+            table.read(batch.sparkSession, branch=branch), batch, keys,
+            ts_col, tracked, tiebreaker=tiebreaker,
+            collapse_unchanged=collapse_unchanged)
+    else:
+        new_dim = scd2_from_changelog(
+            batch, keys, ts_col, tracked, tiebreaker=tiebreaker,
+            collapse_unchanged=collapse_unchanged)
+    return table.write_append(new_dim, branch=branch, operation="overwrite",
+                              properties=properties)
+
+
 def pit_join(
     facts: DataFrame,
     dim: DataFrame,

@@ -297,7 +297,9 @@ def _run_job(spark, job, state_root, classification_overrides,
     registry.gate_job(job, mode)
     # Fail-at-startup for mode/commit combinations that would otherwise
     # silently degrade to a plain append (exit 2 before any data moves):
-    # rollup folds only exist on the snapshot-commit path, and its
+    # merge needs a committing sink that can replace rows by key (the
+    # hive publish would keep both versions of an updated key), rollup
+    # folds only exist on the snapshot-commit path, and its
     # anti-double-count watermark needs a cursor to key on; dynamic
     # partition overwrite is a hive-publish operation.
     write_mode = str(job.target.options.get("mode", "append"))
@@ -307,8 +309,13 @@ def _run_job(spark, job, state_root, classification_overrides,
             "target.options.commit must be hive, table or iceberg, got "
             f"{commit_mode!r}")
     merge_keys = _merge_keys(job.target.options)
-    if write_mode == "merge" and commit_mode != "hive" and not merge_keys:
-        raise ConfigError("target.options.mode=merge needs merge_keys")
+    if write_mode == "merge":
+        if commit_mode == "hive":
+            raise ConfigError(
+                "target.options.mode=merge requires commit: table or "
+                "commit: iceberg (the hive publish only appends)")
+        if not merge_keys:
+            raise ConfigError("target.options.mode=merge needs merge_keys")
     if write_mode == "rollup":
         if commit_mode != "table":
             raise ConfigError(
@@ -821,8 +828,7 @@ def _run_job(spark, job, state_root, classification_overrides,
         # tenant_id, contracts.TargetConfig.from_dict) — created at the
         # current main head on first use
         branch = job.target.branch or "main"
-        if branch != "main" and table.current_version(branch) is None:
-            table.create_branch(branch)
+        head = table.head(branch)
         if write_mode == "merge":
             # idempotent upsert for the >= cursor re-read: the staged batch
             # merges by key through the copy-on-write path (manifest-stats
@@ -848,7 +854,6 @@ def _run_job(spark, job, state_root, classification_overrides,
             # never a history rescan. Query it with rollup.finalize.
             from dativo_ingest_spark.operators import rollup as rollup_mod
 
-            head = table.snapshot(table.current_version(branch))
             batch = spark.read.parquet(stage)
             # The >= cursor predicate re-reads the boundary row by design
             # (reference semantics) and retries can replay whole batches —
@@ -928,10 +933,8 @@ def _run_job(spark, job, state_root, classification_overrides,
                     rprops[wm_key] = prev   # empty delta keeps watermark
                     if head.properties.get(bd_key):
                         rprops[bd_key] = head.properties[bd_key]
-            base = table.read(spark, branch=branch) if head.files else None
-            state = rollup_mod.maintain_rollup(base, batch, rkeys, rmeasures)
-            table.write_append(state, branch=branch, operation="overwrite",
-                               properties=rprops)
+            rollup_mod.commit_rollup(table, batch, rkeys, rmeasures,
+                                     branch=branch, properties=rprops)
             if cursor_field and cursor_field in batch.columns:
                 batch.unpersist()
             shutil.rmtree(stage, ignore_errors=True)
@@ -952,18 +955,10 @@ def _run_job(spark, job, state_root, classification_overrides,
                 *skeys, str(sts),
                 *([str(stie)] if stie and stie not in stracked else []),
                 *stracked)
-            shead = table.snapshot(table.current_version(branch))
-            if shead.files:
-                dim = table.read(spark, branch=branch)
-                new_dim = scd_mod.scd2_merge(
-                    dim, batch, skeys, str(sts), stracked,
-                    tiebreaker=stie, collapse_unchanged=scollapse)
-            else:
-                new_dim = scd_mod.scd2_from_changelog(
-                    batch, skeys, str(sts), stracked,
-                    tiebreaker=stie, collapse_unchanged=scollapse)
-            table.write_append(new_dim, branch=branch,
-                               operation="overwrite", properties=props)
+            scd_mod.commit_scd2(
+                table, batch, skeys, str(sts), stracked, branch=branch,
+                tiebreaker=stie, collapse_unchanged=scollapse,
+                properties=props)
             shutil.rmtree(stage, ignore_errors=True)
         else:
             table.add_files(

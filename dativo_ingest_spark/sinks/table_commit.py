@@ -303,6 +303,16 @@ class FsTable:
         assert v is not None, "branch from an uncreated table"
         self._set_ref(name, v)
 
+    def head(self, branch: str = "main") -> Snapshot:
+        """The branch head snapshot. A missing non-main branch is first
+        created at main's head (branch-per-tenant: a tenant's first
+        write starts from the shared history)."""
+        v = self.current_version(branch)
+        if v is None and branch != "main":
+            self.create_branch(branch)
+            v = self.current_version(branch)
+        return self.snapshot(v)
+
     # -- commits ------------------------------------------------------------
 
     def schema_history(self, branch: str = "main") -> list[dict]:

@@ -9,7 +9,26 @@ counterparts on Spark primitives:
 * watermarked tumbling/sliding window aggregations for late data;
 * built-in ``session_window`` gap sessionization;
 * a custom stateful sessionizer on ``applyInPandasWithState`` — the pattern
-  for operators Spark lacks (per-key state machine, Arrow-batched).
+  for operators Spark lacks (per-key state machine, Arrow-batched);
+* ``*_epoch_writer`` foreachBatch callables that publish each micro-batch
+  exactly once, and launchers (``stream_to_table`` and its siblings) that
+  drain a stream through them under Trigger.AvailableNow and block until
+  it is consumed.
+
+Exactly-once on the snapshot-commit table (sinks/table_commit.FsTable):
+``foreachBatch`` delivers at least once, so every FsTable epoch writer
+commits the epoch id inside the same snapshot as its data, under the
+property ``stream.epoch.{query_id}`` (Delta's txnAppId + txnVersion). The
+query id is the streaming query's own (see :func:`_query_id_resolver`),
+so two queries, or a rebuilt checkpoint, never suppress each other. Before
+any work an epoch reads the head of its branch (creating a missing tenant
+branch at main's head) and returns when the recorded epoch is ``>=`` its
+own: a replay after a crash between our commit and Spark's checkpoint
+commit is a no-op. Properties merge parent to child on commit
+(table_commit.add_files), so interleaved commits from other queries on the
+same branch never erase this query's marker, and parquet staged before a
+crash stays invisible until its manifest lands. The rule lives in
+:func:`_exactly_once`; each writer supplies only its commit.
 
 Scale notes: windowed aggs shuffle once on (key, window) and keep state
 bounded by the watermark horizon; ``applyInPandasWithState`` partitions by
@@ -369,15 +388,16 @@ def run_available_now(
     """Drain a stream into a memory sink with Trigger.AvailableNow and block
     until done (test/CI helper; production writes go to parquet/Kafka sinks
     with the same trigger for incremental batch)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.format("memory").queryName(table_name)
+           .outputMode(output_mode), checkpoint_dir)
+
+
+def _drain(writer, checkpoint_dir: str) -> None:
+    """Start a configured ``DataStreamWriter`` from ``checkpoint_dir``
+    under Trigger.AvailableNow and block until it has consumed all input
+    available at start (a failed micro-batch raises here)."""
+    writer.option("checkpointLocation", checkpoint_dir)\
+        .trigger(availableNow=True).start().awaitTermination()
 
 
 def stream_to_partitioned_parquet(
@@ -386,7 +406,6 @@ def stream_to_partitioned_parquet(
     checkpoint_dir: str,
     partitioning: list[str] | None = None,
     target_file_size_mb: int = 150,
-    available_now: bool = True,
 ) -> None:
     """Continuous ingestion into the same size-targeted hive layout the
     batch sink writes (sinks/parquet_sink.py), via ``foreachBatch`` — the
@@ -401,18 +420,9 @@ def stream_to_partitioned_parquet(
     For strict exactly-once use :func:`stream_to_table`, whose staged
     snapshot commit closes that window.
     """
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(hive_epoch_writer(path, partitioning,
-                                        target_file_size_mb,
-                                        checkpoint_dir=checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(stream_df.writeStream.foreachBatch(hive_epoch_writer(
+        path, partitioning, target_file_size_mb,
+        checkpoint_dir=checkpoint_dir)), checkpoint_dir)
 
 
 def _query_id_resolver(query_id: str | None, checkpoint_dir: str | None):
@@ -438,6 +448,35 @@ def _query_id_resolver(query_id: str | None, checkpoint_dir: str | None):
         return query_id
 
     return resolve
+
+
+def _marker(query_id: str, epoch_id: int) -> dict[str, str]:
+    """The snapshot property recording ``epoch_id`` for one query."""
+    return {f"stream.epoch.{query_id}": str(epoch_id)}
+
+
+def _committed(properties, marker: dict[str, str]) -> bool:
+    """The replay rule: ``properties`` already record the marker's query
+    at an epoch ``>=`` the marker's own."""
+    ((key, epoch),) = marker.items()
+    last = properties.get(key)
+    return last is not None and int(last) >= int(epoch)
+
+
+def _exactly_once(table, branch: str, query_id: str | None,
+                  checkpoint_dir: str | None, commit):
+    """foreachBatch callable for an FsTable epoch writer (the recipe in
+    the module docstring): a replayed epoch returns at the head of
+    ``branch``, any other calls ``commit(batch_df, marker)``, which must
+    commit ``marker`` in the properties of the snapshot it publishes."""
+    qid = _query_id_resolver(query_id, checkpoint_dir)
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        marker = _marker(qid(), epoch_id)
+        if not _committed(table.head(branch).properties, marker):
+            commit(batch_df, marker)
+
+    return write_batch
 
 
 def hive_epoch_writer(path, partitioning, target_file_size_mb=150,
@@ -668,31 +707,15 @@ def table_epoch_writer(table, branch: str = "main",
                        properties: dict[str, str] | None = None,
                        query_id: str | None = None,
                        checkpoint_dir: str | None = None):
-    """foreachBatch callable committing each epoch as one FsTable snapshot,
-    idempotently: the committed epoch id rides in snapshot properties under
-    ``stream.epoch.{query_id}`` (Delta's txnAppId+txnVersion), and a
-    replayed epoch (at-least-once delivery) sees a recorded epoch >= its own
-    at the branch head and skips. Properties merge parent→child on commit
-    (table_commit.add_files), so interleaved commits from other queries on
-    the same branch never erase this query's watermark. Every crash window
-    is safe — parquet files staged before a crash stay invisible (FsTable's
-    atomic visibility), and a crash after commit but before the checkpoint
-    lands hits the skip."""
+    """foreachBatch callable appending each epoch to the FsTable ``table``
+    as one snapshot on ``branch``; ``properties`` ride along with the
+    epoch marker."""
 
-    qid = _query_id_resolver(query_id, checkpoint_dir)
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
+        table.write_append(batch_df, branch=branch,
+                           properties={**(properties or {}), **marker})
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        head = table.snapshot(table.current_version(branch))
-        last = head.properties.get(key)
-        if last is not None and int(last) >= epoch_id:
-            return
-        table.write_append(
-            batch_df, branch=branch,
-            properties={**(properties or {}), key: str(epoch_id)},
-        )
-
-    return write_batch
+    return _exactly_once(table, branch, query_id, checkpoint_dir, commit)
 
 
 def iceberg_epoch_writer(table_ident: str, branch: str = "main",
@@ -702,16 +725,15 @@ def iceberg_epoch_writer(table_ident: str, branch: str = "main",
                          sink=None):
     """foreachBatch callable committing each epoch as one REAL Iceberg
     snapshot (jar-present deployments) — the native-catalog twin of
-    :func:`table_epoch_writer`, same exactly-once recipe: the committed
-    epoch id rides in the SNAPSHOT SUMMARY under
-    ``stream.epoch.{query_id}`` (Delta's txnAppId+txnVersion), written
-    atomically inside the data commit via the ``snapshot-property.<key>``
-    write option and read back from snapshot history
-    (iceberg_sink.get_snapshot_property). TBLPROPERTIES would NOT be safe
-    here: a property write is a second transaction after the append, and
-    a crash in between would leave the epoch unrecorded — the replay
-    would append again (duplicates). ``sink`` is injectable for tests;
-    defaults to :mod:`dativo_ingest_spark.sinks.iceberg_sink`."""
+    :func:`table_epoch_writer`, with the same marker key and replay rule.
+    The marker rides in the SNAPSHOT SUMMARY, written atomically inside
+    the data commit via the ``snapshot-property.<key>`` write option and
+    read back from snapshot history (iceberg_sink.get_snapshot_property).
+    TBLPROPERTIES would NOT be safe here: a property write is a second
+    transaction after the append, and a crash in between would leave the
+    epoch unrecorded — the replay would append again (duplicates).
+    ``sink`` is injectable for tests; defaults to
+    :mod:`dativo_ingest_spark.sinks.iceberg_sink`."""
     if sink is None:
         from dativo_ingest_spark.sinks import iceberg_sink as sink
 
@@ -719,14 +741,14 @@ def iceberg_epoch_writer(table_ident: str, branch: str = "main",
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        key = f"stream.epoch.{qid()}"
+        marker = _marker(qid(), epoch_id)
+        (key,) = marker
         last = sink.get_snapshot_property(spark, table_ident, key)
-        if last is not None and int(last) >= epoch_id:
+        if _committed({key: last}, marker):
             return
         sink.commit(
             spark, batch_df, table_ident, mode="append", branch=branch,
-            properties=properties,
-            snapshot_properties={key: str(epoch_id)},
+            properties=properties, snapshot_properties=marker,
         )
 
     return write_batch
@@ -737,7 +759,6 @@ def stream_to_iceberg(
     table_ident: str,
     checkpoint_dir: str,
     branch: str = "main",
-    available_now: bool = True,
 ) -> None:
     """Exactly-once streaming ingestion into a real Iceberg table:
     ``foreachBatch`` + :func:`iceberg_epoch_writer` (requires the catalog
@@ -745,17 +766,8 @@ def stream_to_iceberg(
     from dativo_ingest_spark.sinks import iceberg_sink
 
     iceberg_sink.require_available(stream_df.sparkSession, table_ident)
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(iceberg_epoch_writer(table_ident, branch,
-                                           checkpoint_dir=checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(stream_df.writeStream.foreachBatch(iceberg_epoch_writer(
+        table_ident, branch, checkpoint_dir=checkpoint_dir)), checkpoint_dir)
 
 
 def stream_to_table(
@@ -763,25 +775,14 @@ def stream_to_table(
     table_root: str,
     checkpoint_dir: str,
     branch: str = "main",
-    available_now: bool = True,
 ) -> None:
     """Exactly-once streaming ingestion into an FsTable (snapshot-commit
-    sink): staged-then-committed epochs + epoch-id dedup make the
-    at-least-once ``foreachBatch`` contract exactly-once end-to-end."""
+    sink): foreachBatch + :func:`table_epoch_writer`."""
     from dativo_ingest_spark.sinks.table_commit import FsTable
 
     table = FsTable.create(table_root)
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(table_epoch_writer(table, branch,
-                                         checkpoint_dir=checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(stream_df.writeStream.foreachBatch(table_epoch_writer(
+        table, branch, checkpoint_dir=checkpoint_dir)), checkpoint_dir)
 
 
 def rollup_epoch_writer(table, keys, measures, branch: str = "main",
@@ -789,14 +790,10 @@ def rollup_epoch_writer(table, keys, measures, branch: str = "main",
                         checkpoint_dir: str | None = None):
     """foreachBatch callable maintaining an incremental rollup (a streaming
     materialized view): each micro-batch folds into the persisted partial
-    state via operators/rollup.py:maintain_rollup and the NEW state commits
-    as one atomic overwrite snapshot with the epoch id in the same commit —
-    state content and replay marker can never diverge (the exactly-once
-    recipe of :func:`table_epoch_writer`, applied to state instead of data).
-
-    A replayed epoch (at-least-once foreachBatch delivery) sees a recorded
-    epoch >= its own at the branch head and skips, so the fold is applied
-    exactly once per batch.  Readers serve queries from
+    state and the NEW state commits as one atomic overwrite snapshot
+    (operators/rollup.py:commit_rollup). The marker rides in that same
+    commit, so state content and replay marker can never diverge and the
+    fold is applied exactly once per batch. Readers serve queries from
     ``rollup.finalize(table.read(spark), keys, measures)`` at any time and
     flip atomically between consistent states.
 
@@ -809,25 +806,11 @@ def rollup_epoch_writer(table, keys, measures, branch: str = "main",
     """
     from dativo_ingest_spark.operators import rollup
 
-    qid = _query_id_resolver(query_id, checkpoint_dir)
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
+        rollup.commit_rollup(table, batch_df, keys, measures, branch=branch,
+                             properties=marker)
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        if branch != "main" and table.current_version(branch) is None:
-            table.create_branch(branch)   # bootstrap on first epoch
-        head = table.snapshot(table.current_version(branch))
-        last = head.properties.get(key)
-        if last is not None and int(last) >= epoch_id:
-            return
-        base = (table.read(batch_df.sparkSession, branch=branch)
-                if head.files else None)
-        new_state = rollup.maintain_rollup(base, batch_df, keys, measures)
-        table.write_append(
-            new_state, branch=branch, operation="overwrite",
-            properties={key: str(epoch_id)},
-        )
-
-    return write_batch
+    return _exactly_once(table, branch, query_id, checkpoint_dir, commit)
 
 
 def stream_rollup(
@@ -837,7 +820,6 @@ def stream_rollup(
     measures,
     checkpoint_dir: str,
     branch: str = "main",
-    available_now: bool = True,
 ):
     """Maintain a rollup table from a stream: foreachBatch +
     :func:`rollup_epoch_writer`. Returns the FsTable holding the state;
@@ -845,17 +827,9 @@ def stream_rollup(
     from dativo_ingest_spark.sinks.table_commit import FsTable
 
     table = FsTable.create(table_root)
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(rollup_epoch_writer(table, keys, measures, branch,
-                                          checkpoint_dir=checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(stream_df.writeStream.foreachBatch(rollup_epoch_writer(
+        table, keys, measures, branch, checkpoint_dir=checkpoint_dir)),
+        checkpoint_dir)
     return table
 
 
@@ -865,8 +839,9 @@ def scd2_epoch_writer(table, keys, ts_col, tracked, branch: str = "main",
                       query_id: str | None = None,
                       checkpoint_dir: str | None = None):
     """foreachBatch callable maintaining an SCD type-2 dimension from a
-    change stream: each micro-batch merges via operators/scd.py:scd2_merge
-    and the new dimension commits as one atomic overwrite snapshot.
+    change stream: each micro-batch merges into the dimension and the new
+    dimension commits as one atomic overwrite snapshot
+    (operators/scd.py:commit_scd2).
 
     Unlike :func:`rollup_epoch_writer` the epoch marker is belt-and-
     braces, not load-bearing: merging an already-applied batch rebuilds
@@ -875,30 +850,13 @@ def scd2_epoch_writer(table, keys, ts_col, tracked, branch: str = "main",
     on replay."""
     from dativo_ingest_spark.operators import scd
 
-    qid = _query_id_resolver(query_id, checkpoint_dir)
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
+        scd.commit_scd2(table, batch_df, keys, ts_col, tracked,
+                        branch=branch, tiebreaker=tiebreaker,
+                        collapse_unchanged=collapse_unchanged,
+                        properties=marker)
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        if branch != "main" and table.current_version(branch) is None:
-            table.create_branch(branch)
-        head = table.snapshot(table.current_version(branch))
-        last = head.properties.get(key)
-        if last is not None and int(last) >= epoch_id:
-            return
-        if head.files:
-            dim = table.read(batch_df.sparkSession, branch=branch)
-            new_dim = scd.scd2_merge(
-                dim, batch_df, keys, ts_col, tracked,
-                tiebreaker=tiebreaker,
-                collapse_unchanged=collapse_unchanged)
-        else:
-            new_dim = scd.scd2_from_changelog(
-                batch_df, keys, ts_col, tracked, tiebreaker=tiebreaker,
-                collapse_unchanged=collapse_unchanged)
-        table.write_append(new_dim, branch=branch, operation="overwrite",
-                           properties={key: str(epoch_id)})
-
-    return write_batch
+    return _exactly_once(table, branch, query_id, checkpoint_dir, commit)
 
 
 def dedup_epoch_writer(out_table, index_table, id_col: str,
@@ -915,41 +873,28 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
 
     Each epoch: drop batch rows already in the corpus (``mode`` =
     ``exact`` fingerprints / ``minhash`` band signatures / ``embedding``
-    LSH cells — operators/dedup.py + operators/similarity.py), publish
-    the survivors to ``out_table`` as ONE snapshot carrying the epoch
-    marker (atomic with the data, the ``table_epoch_writer`` recipe),
-    then append the survivors' index entries with their own marker.
-    Every crash window is safe:
+    LSH cells — operators/ingest_dedup.py), publish the survivors to
+    ``out_table`` as ONE snapshot carrying the epoch marker, then append
+    the survivors' index entries with the same marker. The INDEX head
+    gates the epoch, and the out table is checked with the same marker,
+    so every crash window is safe:
 
     * before publish → full replay, the dedup re-runs identically
       (deterministic vs the unchanged index);
-    * between publish and index append → the replay sees the OUT marker,
-      skips the publish (no duplicate rows — this is the window batch
-      mode leaves open), re-derives the SAME kept set from the unchanged
-      index, and completes the index append;
+    * between publish and index append → the replay passes the index
+      gate, re-derives the SAME kept set from the unchanged index, finds
+      the OUT marker and skips the publish (no duplicate rows — this is
+      the window batch mode leaves open), and completes the index append;
     * after both → the replay sees the INDEX marker and returns.
 
-    Epoch markers are query-scoped (``stream.epoch.{query_id}``) like
-    every exactly-once writer here. ``dedup_opts`` pass through to the
-    mode's operator (threshold, bands, num_hashes, ...).
+    ``dedup_opts`` pass through to the mode's operator (threshold, bands,
+    num_hashes, ...).
     """
     from dativo_ingest_spark.operators.ingest_dedup import IngestDedup
 
     dd = IngestDedup(mode, id_col, content_col, dedup_opts)
-    qid = _query_id_resolver(query_id, checkpoint_dir)
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        # branch bootstrap BEFORE any head read (the batch operators do
-        # this internally, but this writer reads both heads first)
-        if branch != "main":
-            for t in (out_table, index_table):
-                if t.current_version(branch) is None:
-                    t.create_branch(branch)
-        ix_head = index_table.snapshot(index_table.current_version(branch))
-        ix_last = ix_head.properties.get(key)
-        if ix_last is not None and int(ix_last) >= epoch_id:
-            return   # fully processed epoch
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
         kept, _, _, sig = dd.against_index(
             batch_df.sparkSession, batch_df, index_table, branch=branch)
         # the deferred entries carry the index codec's columns (PQ codes,
@@ -957,22 +902,20 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
         # wrong schema
         entries = dd.index_entries(kept, sig=sig)
         try:
-            out_head = out_table.snapshot(
-                out_table.current_version(branch))
-            out_last = out_head.properties.get(key)
-            if out_last is None or int(out_last) < epoch_id:
-                out_table.write_append(
-                    kept, branch=branch, properties={key: str(epoch_id)})
+            if not _committed(out_table.head(branch).properties, marker):
+                out_table.write_append(kept, branch=branch,
+                                       properties=marker)
             # index entries append AFTER the publish (crash re-derives,
-            # never loses) with its own marker
-            index_table.write_append(
-                entries, branch=branch, properties={key: str(epoch_id)})
+            # never loses)
+            index_table.write_append(entries, branch=branch,
+                                     properties=marker)
         finally:
             kept.unpersist()
             if sig is not None:
                 sig.unpersist()
 
-    return write_batch
+    return _exactly_once(index_table, branch, query_id, checkpoint_dir,
+                         commit)
 
 
 def ivfpq_index_epoch_writer(index_table, artifact: dict, id_col: str,
@@ -986,33 +929,20 @@ def ivfpq_index_epoch_writer(index_table, artifact: dict, id_col: str,
     expressions a batch ``ivfpq_index_append`` uses — mismatched
     codebooks silently mis-encode, so the artifact rides the closure,
     never the batch) and appends its (id, cell, codes) rows as ONE
-    cell-clustered snapshot carrying a query-scoped epoch marker
-    (``stream.epoch.{query_id}``): a replayed epoch sees the marker and
-    returns, so a crash between Spark's checkpoint commit and ours
-    never double-appends (exactly-once, the ``table_epoch_writer``
-    recipe). Serving (:func:`ivfpq_index_topk`) keeps its manifest
-    file prune — every epoch's files carry cell stats — and
-    :func:`ivfpq_index_compact` is the scheduled maintenance that
-    collapses the per-epoch fragmentation."""
+    cell-clustered snapshot carrying the epoch marker. Serving
+    (:func:`ivfpq_index_topk`) keeps its manifest file prune — every
+    epoch's files carry cell stats — and :func:`ivfpq_index_compact` is
+    the scheduled maintenance that collapses the per-epoch
+    fragmentation."""
     from dativo_ingest_spark.operators.quantization import (
         ivfpq_index_append)
 
-    qid = _query_id_resolver(query_id, checkpoint_dir)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        if branch != "main" and \
-                index_table.current_version(branch) is None:
-            index_table.create_branch(branch)
-        head = index_table.snapshot(index_table.current_version(branch))
-        last = head.properties.get(key)
-        if last is not None and int(last) >= epoch_id:
-            return  # replayed epoch: the append already committed
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
         ivfpq_index_append(batch_df, id_col, vec_col, index_table,
-                           artifact, branch=branch,
-                           properties={key: str(epoch_id)})
+                           artifact, branch=branch, properties=marker)
 
-    return write_batch
+    return _exactly_once(index_table, branch, query_id, checkpoint_dir,
+                         commit)
 
 
 def stream_index_ivfpq(
@@ -1023,7 +953,6 @@ def stream_index_ivfpq(
     artifact: dict,
     checkpoint_dir: str,
     branch: str = "main",
-    available_now: bool = True,
 ):
     """Continuously append a vector stream to a persisted IVF-PQ
     retrieval index: foreachBatch + :func:`ivfpq_index_epoch_writer`.
@@ -1032,18 +961,9 @@ def stream_index_ivfpq(
     from dativo_ingest_spark.sinks.table_commit import FsTable
 
     index_table = FsTable.create(index_root)
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(ivfpq_index_epoch_writer(
-            index_table, artifact, id_col, vec_col, branch=branch,
-            checkpoint_dir=checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(stream_df.writeStream.foreachBatch(ivfpq_index_epoch_writer(
+        index_table, artifact, id_col, vec_col, branch=branch,
+        checkpoint_dir=checkpoint_dir)), checkpoint_dir)
     return index_table
 
 
@@ -1056,7 +976,6 @@ def stream_dedup_to_table(
     checkpoint_dir: str,
     mode: str = "exact",
     branch: str = "main",
-    available_now: bool = True,
     **dedup_opts,
 ):
     """Continuously ingest a stream into a deduplicated corpus table:
@@ -1066,18 +985,10 @@ def stream_dedup_to_table(
 
     out_table = FsTable.create(out_root)
     index_table = FsTable.create(index_root)
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(dedup_epoch_writer(
-            out_table, index_table, id_col, content_col, mode=mode,
-            branch=branch, checkpoint_dir=checkpoint_dir, **dedup_opts))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(stream_df.writeStream.foreachBatch(dedup_epoch_writer(
+        out_table, index_table, id_col, content_col, mode=mode,
+        branch=branch, checkpoint_dir=checkpoint_dir, **dedup_opts)),
+        checkpoint_dir)
     return out_table, index_table
 
 
@@ -1087,9 +998,7 @@ def window_rollup_epoch_writer(table, keys: list[str],
     """foreachBatch callable publishing an UPDATE-mode windowed aggregation
     into an FsTable by key upsert: each micro-batch's changed window rows
     MERGE over their previous values (sinks/table_commit.py:merge_upsert),
-    with the epoch marker committed atomically inside the same snapshot —
-    the :func:`rollup_epoch_writer` exactly-once recipe for watermarked
-    window state instead of additive fold state.
+    with the epoch marker inside the same snapshot.
 
     Update mode re-emits a window's CURRENT total whenever a batch touches
     it, so replace-by-key is the correct fold and emission timing never
@@ -1101,23 +1010,17 @@ def window_rollup_epoch_writer(table, keys: list[str],
     the touched-window count — the updates' key bounds prune the rewrite
     to recent files via manifest stats, so old windows carry by reference.
     """
-    qid = _query_id_resolver(query_id, checkpoint_dir)
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        head = table.snapshot(table.current_version())
-        last = head.properties.get(key)
-        if last is not None and int(last) >= epoch_id:
-            return
-        if not head.files:
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
+        if not table.head().files:
             table.write_append(batch_df, stats_columns=list(keys),
-                               properties={key: str(epoch_id)})
-            return
-        table.merge_upsert(batch_df.sparkSession, batch_df, keys=list(keys),
-                           stats_columns=list(keys),
-                           properties={key: str(epoch_id)})
+                               properties=marker)
+        else:
+            table.merge_upsert(batch_df.sparkSession, batch_df,
+                               keys=list(keys), stats_columns=list(keys),
+                               properties=marker)
 
-    return write_batch
+    return _exactly_once(table, "main", query_id, checkpoint_dir, commit)
 
 
 def stream_windowed_rollup(
@@ -1129,7 +1032,6 @@ def stream_windowed_rollup(
     watermark: str = "1 hour",
     keys: list[str] | None = None,
     value_cents_col: str | None = None,
-    available_now: bool = True,
 ):
     """Watermarked tumbling-window rollup from a stream into an FsTable:
     late rows land or drop by the engine's watermark (state for closed
@@ -1168,19 +1070,10 @@ def stream_windowed_rollup(
         )
     )
     table = FsTable.create(table_root)
-    writer = (
-        agged.writeStream
-        .outputMode("update")
-        .foreachBatch(window_rollup_epoch_writer(
-            table, ["window_start"] + group_keys,
-            checkpoint_dir=checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode needs a long-lived process
-        writer.start()
+    _drain(agged.writeStream.outputMode("update").foreachBatch(
+        window_rollup_epoch_writer(table, ["window_start"] + group_keys,
+                                   checkpoint_dir=checkpoint_dir)),
+        checkpoint_dir)
     return table
 
 
@@ -1197,32 +1090,25 @@ def wap_epoch_writer(table, expectations: list[dict],
     before an append) cannot promise under a crash between gate and
     sink.
 
-    Exactly-once: the epoch marker rides INSIDE the publish commit's
-    properties, so a replayed epoch is suppressed before any audit work;
-    a crash after publish but before the checkpoint advances replays the
-    epoch and hits the marker. Failed epochs leave their evidence on the
-    uuid audit branch; ``on_fail='skip'`` quarantines and continues
-    (``'abort'`` re-raises to stop the stream — strict semantics, the
-    source replays the batch on restart).
+    The epoch marker rides INSIDE the publish commit's properties, so a
+    replayed epoch is suppressed before any audit work. Failed epochs
+    leave their evidence on the uuid audit branch; ``on_fail='skip'``
+    quarantines and continues (``'abort'`` re-raises to stop the stream —
+    strict semantics, the source replays the batch on restart).
 
     Scale: per epoch = one expectations aggregate over the audited state
     plus a manifest-only publish (data files shared by reference).
     """
     if on_fail not in ("skip", "abort"):
         raise ValueError(f"on_fail must be skip|abort, got {on_fail!r}")
-    qid = _query_id_resolver(query_id, checkpoint_dir)
     logger = logging.getLogger(__name__)
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"stream.epoch.{qid()}"
-        head = table.snapshot(table.current_version())
-        last = head.properties.get(key)
-        if last is not None and int(last) >= epoch_id:
-            return
+    def commit(batch_df: DataFrame, marker: dict[str, str]) -> None:
         ok, results, branch = table.write_audit_publish(
             batch_df.sparkSession, batch_df, expectations,
-            publish_properties={key: str(epoch_id)})
+            publish_properties=marker)
         if not ok:
+            (epoch_id,) = marker.values()
             failed = [r.name for r in results if not r.passed]
             if on_fail == "abort":
                 raise RuntimeError(
@@ -1232,7 +1118,7 @@ def wap_epoch_writer(table, expectations: list[dict],
                 "epoch %s quarantined on branch %r (failed: %s)",
                 epoch_id, branch, failed)
 
-    return write_batch
+    return _exactly_once(table, "main", query_id, checkpoint_dir, commit)
 
 
 def mixture_admission_gate(rates_micro: dict, domain_col: str,

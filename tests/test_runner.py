@@ -540,6 +540,9 @@ def test_table_commit_merge_mode_requires_keys(spark, tmp_path):
     d = job_dict(str(src), str(tmp_path / "t"))
     d["target"]["options"] = {"mode": "merge", "commit": "table"}
     _raises_before_any_data(spark, d, tmp_path / "t", "merge_keys")
+    # the hive publish only appends: an updated key would keep both rows
+    d["target"]["options"] = {"mode": "merge", "merge_keys": "id"}
+    _raises_before_any_data(spark, d, tmp_path / "t", "commit: table")
 
 
 def test_table_commit_scd2_mode_requires_config(spark, tmp_path):

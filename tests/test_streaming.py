@@ -182,6 +182,15 @@ def test_table_epoch_writer_exactly_once(spark, tmp_path):
     # replay of an OLDER epoch after newer commits is also skipped
     wb(df, 0)
     assert table.read(spark).count() == 4
+    # a fresh tenant branch bootstraps at main's head on its first epoch
+    fresh = FsTable.create(str(tmp_path / "fresh"))
+    main_v = fresh.current_version()
+    wb = pipeline.table_epoch_writer(fresh, branch="acme", query_id="q1")
+    wb(df, 0)
+    wb(df, 0)   # replay: skipped
+    assert len(fresh.history("acme")) == 2      # create + one commit
+    assert fresh.read(spark, branch="acme").count() == 2
+    assert fresh.current_version() == main_v    # main unchanged
 
 
 def test_table_epoch_writer_independent_queries(spark, tmp_path):
