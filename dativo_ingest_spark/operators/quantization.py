@@ -954,7 +954,6 @@ def ivfpq_index_compact(
     index_table,
     branch: str = "main",
     max_files_per_cell: int | None = None,
-    max_replans: int = 3,
 ) -> int:
     """Re-cluster the committed retrieval index by cell range — the
     maintenance half of the incremental-append story: every
@@ -970,56 +969,37 @@ def ivfpq_index_compact(
     bottleneck; touching only the hot ranges makes maintenance
     O(fragmentation), not O(corpus)).
 
-    Commit discipline (ADVICE r13, the lost-update fix): the rewrite
-    commits through :meth:`FsTable.replace_files` pinned to the
-    snapshot version the plan READ (``expected_base``), and re-plans
-    from the new head on :class:`CommitConflict` — the merge_upsert
-    discipline — so a concurrent :func:`ivfpq_index_append` landing
-    between the read and the commit is NEVER silently dropped (the old
-    ``write_append(operation="overwrite")`` path rebased a stale base
-    with staged-only files, losing the append). Old files stay
-    time-travelable until vacuum; serving reads are never blocked
-    (snapshot isolation); results are unchanged (codes are data,
-    placement is layout). Returns the head's new file count (whole
-    table), or -1 if nothing qualified."""
-    from dativo_ingest_spark.sinks.table_commit import CommitConflict
+    Commit discipline (ADVICE r13, the lost-update fix): the recluster
+    is a plan on :meth:`FsTable.rewrite`, which commits pinned to the
+    snapshot the plan read and re-plans from the new head on a
+    conflict, so a concurrent :func:`ivfpq_index_append` landing
+    between the read and the commit is NEVER silently dropped. Old
+    files stay time-travelable until vacuum; serving reads are never
+    blocked (snapshot isolation); results are unchanged (codes are
+    data, placement is layout). Returns the head's new file count
+    (whole table), or -1 if nothing qualified."""
+    from dativo_ingest_spark.sinks.table_commit import Rewrite
 
-    last_exc = None
-    for _ in range(max_replans):
-        base_v = index_table.current_version(branch)
-        if base_v is None:
-            raise ValueError(f"unknown branch {branch!r}")
-        base = index_table.snapshot(base_v)
+    def plan(base):
         if max_files_per_cell is None:
             victims = [f for f in base.files if f.get("num_rows")]
         else:
             victims = _fragmented_cell_files(base.files,
                                              max_files_per_cell)
         if len(victims) < 2:
-            return -1  # nothing to gain
-        import os as _os
-
-        coded = spark.read.schema(
-            index_table.read(spark, branch=branch).schema
-        ).parquet(*[_os.path.join(index_table.root, f["path"])
-                    for f in victims])
+            return None  # nothing to gain
+        coded = index_table.scan(spark, [f["path"] for f in victims],
+                                 base.schema_json)
         n_cells = (coded.agg(F.max("cell")).first()[0] or 0) + 1
-        stage = index_table.new_stage()
-        (coded.repartitionByRange(min(int(n_cells), 200), "cell")
-         .sortWithinPartitions("cell", "id")
-         .write.option("compression", "snappy")
-         .parquet(_os.path.join(index_table.root, stage)))
-        try:
-            snap = index_table.replace_files(
-                [f["path"] for f in victims],
-                index_table.staged_files(stage, stats_columns=["cell"]),
-                expected_base=base_v, branch=branch,
-                properties={"compaction": "ivfpq-cell-recluster"})
-            return len(snap.files)
-        except CommitConflict as exc:
-            last_exc = exc  # head advanced (e.g. a concurrent append):
-            continue        # re-plan against the new snapshot
-    raise last_exc
+        return Rewrite(
+            victims,
+            coded.repartitionByRange(min(int(n_cells), 200), "cell")
+            .sortWithinPartitions("cell", "id"),
+            stats_columns=["cell"],
+            properties={"compaction": "ivfpq-cell-recluster"})
+
+    snap = index_table.rewrite(plan, branch)
+    return -1 if snap is None else len(snap.files)
 
 
 def ivfpq_index_topk(

@@ -49,12 +49,19 @@ import json
 import os
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from dativo_ingest_spark.operators.util import local_df
+
+
+#: attempts :meth:`FsTable.rewrite` re-plans from a moved head, and
+#: :meth:`FsTable.add_files` rebases onto one, before giving up (only
+#: sustained contention exhausts either)
+_MAX_REPLANS = 3
+_MAX_RETRIES = 5
 
 
 class CommitConflict(Exception):
@@ -134,8 +141,18 @@ class Snapshot:
     schema_json: str | None = None
     properties: dict[str, str] = field(default_factory=dict)
 
-    def paths(self, root: str) -> list[str]:
-        return [os.path.join(root, f["path"]) for f in self.files]
+
+class Rewrite(NamedTuple):
+    """What a :meth:`FsTable.rewrite` plan returns: drop ``remove`` (file
+    entries of the snapshot it planned against) and add the files of
+    ``frame``, with per-file stats for ``stats_columns``.
+    ``schema_json=None`` keeps the base snapshot's schema."""
+
+    remove: list[dict[str, Any]]
+    frame: DataFrame
+    stats_columns: list[str] | None = None
+    schema_json: str | None = None
+    properties: dict[str, str] | None = None
 
 
 class FsTable:
@@ -187,6 +204,13 @@ class FsTable:
         if head != cached:
             self._set_ref(branch, head)
         return head
+
+    def _version(self, branch: str) -> int:
+        """The branch head's version; ValueError for an unknown branch."""
+        v = self.current_version(branch)
+        if v is None:
+            raise ValueError(f"unknown branch {branch!r}")
+        return v
 
     def _claim_path(self, branch: str, base_v: int) -> str:
         return os.path.join(self._refs, f".{branch}.{base_v}.next")
@@ -381,6 +405,43 @@ class FsTable:
             list(old.files), operation="overwrite", branch=branch,
             schema_json=old.schema_json)
 
+    def _commit(
+        self,
+        base: Snapshot,
+        branch: str,
+        operation: str,
+        files: list[dict[str, Any]],
+        schema_json: str | None,
+        properties: dict[str, str] | None,
+    ) -> Snapshot | None:
+        """Publish ``files`` as the child of ``base`` and advance ``branch``
+        to it; None when the branch already moved past ``base`` (the
+        published manifest is then unreachable from any ref — a metadata
+        orphan, like Iceberg's).
+
+        Version numbers are a single global sequence across branches
+        (lineage lives in the parent pointer, Nessie-style). Losing the
+        number race to a writer on ANY branch is benign — the manifest
+        content is base-correct — so it just renumbers."""
+        for _ in range(1000):
+            snap = Snapshot(
+                version=self._next_version(), parent=base.version,
+                operation=operation, files=files,
+                schema_json=schema_json or base.schema_json,
+                properties={**base.properties, **(properties or {})},
+            )
+            try:
+                self._publish(snap)
+                break
+            except CommitConflict:
+                continue
+        else:  # pragma: no cover - pathological contention
+            raise CommitConflict("could not allocate a version number")
+        if not self._claim(branch, base.version, snap.version):
+            return None
+        self._set_ref(branch, snap.version)
+        return snap
+
     def add_files(
         self,
         staged: list[dict[str, Any]],
@@ -388,7 +449,6 @@ class FsTable:
         branch: str = "main",
         schema_json: str | None = None,
         properties: dict[str, str] | None = None,
-        max_retries: int = 5,
     ) -> Snapshot:
         """Commit staged files (dicts with ``path`` relative to root, plus
         any stats) as a new snapshot on ``branch``.
@@ -399,40 +459,15 @@ class FsTable:
         the file list — staged files never change, only the base snapshot
         does, so no concurrent commit is ever dropped.
         """
-        for _ in range(max_retries):
-            base_v = self.current_version(branch)
-            if base_v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-            base = self.snapshot(base_v)
+        for _ in range(_MAX_RETRIES):
+            base = self.snapshot(self._version(branch))
             files = staged if operation == "overwrite" else base.files + staged
-            # Version numbers are a single global sequence across branches
-            # (lineage lives in the parent pointer, Nessie-style). Losing
-            # the number race to a writer on ANY branch is benign — the
-            # manifest content is base-correct — so just renumber.
-            snap = None
-            for _ in range(1000):
-                cand = Snapshot(
-                    version=self._next_version(), parent=base_v,
-                    operation=operation, files=files,
-                    schema_json=schema_json or base.schema_json,
-                    properties={**base.properties, **(properties or {})},
-                )
-                try:
-                    self._publish(cand)
-                    snap = cand
-                    break
-                except CommitConflict:
-                    continue
-            if snap is None:  # pragma: no cover - pathological contention
-                raise CommitConflict("could not allocate a version number")
-            if self._claim(branch, base_v, snap.version):
-                self._set_ref(branch, snap.version)
+            snap = self._commit(base, branch, operation, files, schema_json,
+                                properties)
+            if snap is not None:
                 return snap
-            # Stale base: the branch advanced under us. Our published
-            # manifest is unreachable from any ref (a metadata orphan,
-            # like Iceberg's); retry against the new head.
         raise CommitConflict(
-            f"gave up after {max_retries} retries on branch {branch!r}"
+            f"gave up after {_MAX_RETRIES} retries on branch {branch!r}"
         )
 
     def replace_files(
@@ -453,33 +488,52 @@ class FsTable:
         cannot be blindly rebased — concurrent appends may hold rows the
         plan should have rewritten, and removed files may already be gone.
         Raises :class:`CommitConflict` so the caller re-plans from the new
-        head (:meth:`merge_upsert` does exactly that)."""
+        head (:meth:`rewrite` does exactly that)."""
         base = self.snapshot(expected_base)
         remove = set(remove_paths)
-        files = [f for f in base.files if f["path"] not in remove] + staged
-        snap = None
-        for _ in range(1000):
-            cand = Snapshot(
-                version=self._next_version(), parent=expected_base,
-                operation="replace", files=files,
-                schema_json=schema_json or base.schema_json,
-                properties={**base.properties, **(properties or {})},
-            )
-            try:
-                self._publish(cand)
-                snap = cand
-                break
-            except CommitConflict:
-                continue  # version-number race only; content is still valid
-        if snap is None:  # pragma: no cover - pathological contention
-            raise CommitConflict("could not allocate a version number")
-        if not self._claim(branch, expected_base, snap.version):
+        snap = self._commit(
+            base, branch, "replace",
+            [f for f in base.files if f["path"] not in remove] + staged,
+            schema_json, properties)
+        if snap is None:
             raise CommitConflict(
                 f"branch {branch!r} advanced past v{expected_base}; "
                 "replacement must be re-planned"
             )
-        self._set_ref(branch, snap.version)
         return snap
+
+    def rewrite(
+        self,
+        plan: Callable[[Snapshot], Rewrite | None],
+        branch: str = "main",
+    ) -> Snapshot | None:
+        """The one copy-on-write file-replacement loop (MERGE, DELETE,
+        compaction, Z-order and the IVF-PQ recluster are each only a
+        ``plan``): read the branch head, call ``plan(head)`` — None means
+        nothing to do and is returned as is — stage the planned frame, and
+        commit it with the precise :meth:`replace_files` pinned to the
+        head the plan read. A commit landing in between raises
+        :class:`CommitConflict` and the plan re-runs against the new head,
+        so a concurrent append is never dropped and never rewritten
+        twice. A lost attempt's stage is unreferenced — an invisible
+        orphan, like any crash-before-commit, reclaimed by
+        :meth:`vacuum`."""
+        for attempt in range(_MAX_REPLANS):
+            base = self.snapshot(self._version(branch))
+            planned = plan(base)
+            if planned is None:
+                return None
+            staged = self._stage(planned.frame, planned.stats_columns)
+            try:
+                return self.replace_files(
+                    [f["path"] for f in planned.remove], staged,
+                    expected_base=base.version, branch=branch,
+                    schema_json=planned.schema_json,
+                    properties=planned.properties,
+                )
+            except CommitConflict:
+                if attempt == _MAX_REPLANS - 1:
+                    raise  # pragma: no cover - needs sustained contention
 
     def merge_upsert(
         self,
@@ -489,22 +543,23 @@ class FsTable:
         branch: str = "main",
         stats_columns: list[str] | None = None,
         properties: dict[str, str] | None = None,
-        max_replans: int = 3,
     ) -> Snapshot:
         """Copy-on-write MERGE (upsert by key): rows of ``updates`` replace
         same-key rows, new keys append — the idempotence primitive the
         ``>=`` cursor re-read needs (SURVEY §7: re-ingesting the boundary
         row must not duplicate it; the reference leaves this unhandled).
 
-        Scale shape (Delta/Iceberg COW MERGE): the updates' key bounds
-        prune the base file list through the manifest stats, so only files
-        that *can* hold a matching key are rewritten — at 100 TB an
-        incremental batch touches a handful of recent files, and the
-        rewrite is one anti-join + union write of just those. Untouched
-        files carry over by reference (no data movement). Concurrency is
-        serializable-by-re-plan: the precise :meth:`replace_files` commit
-        refuses a moved head and the merge re-plans against it, so a
-        concurrent append is never dropped and never double-merged.
+        Scale shape (Delta/Iceberg COW MERGE): the updates' per-key
+        [min, max] bounds prune the base file list through the manifest
+        stats, so only files that *can* hold a matching key are rewritten
+        — one anti-join + union write of just those; untouched files
+        carry over by reference. That keeps a batch to a handful of files
+        only while its key bounds are narrow (key-ordered updates). A few
+        old keys stretch the bounds over the whole table: on the
+        ``cdc_merge_table`` perfbench workload (5% uniformly old keys)
+        every delta rewrites 5/5 live files, 38.7 bytes written per input
+        byte. Merge-on-read is ROADMAP direction 1. Concurrency is
+        serializable-by-re-plan (:meth:`rewrite`).
 
         ``updates`` must be key-unique (dedup upstream — e.g.
         ``operators/dedup.exact_dedup``); both copies of a duplicated key
@@ -522,52 +577,24 @@ class FsTable:
             for clause in ((k, ">=", _json_safe(bounds_row[f"min_{k}"])),
                            (k, "<=", _json_safe(bounds_row[f"max_{k}"])))
         ]
-        last_exc: CommitConflict | None = None
-        for _ in range(max_replans):
-            base_v = self.current_version(branch)
-            if base_v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-            base = self.snapshot(base_v)
+
+        def plan(base: Snapshot) -> Rewrite:
             affected = self.matching_files(base, where)
-            stage = self.new_stage()
             out = updates
             if affected:
-                # rewrite reads under the BASE schema (schema evolution:
-                # affected files may predate an added column); the union
-                # allows missing columns on either side, so an updates
-                # batch that adds or drops a column evolves the table in
-                # the same commit — old rows project NULL for new columns
-                reader = spark.read
-                if base.schema_json:
-                    from pyspark.sql.types import StructType
-
-                    reader = reader.schema(
-                        StructType.fromJson(json.loads(base.schema_json)))
-                existing = reader.parquet(*[
-                    os.path.join(self.root, f["path"]) for f in affected
-                ])
-                kept = existing.join(
-                    updates.select(*keys).dropDuplicates(keys),
-                    on=keys, how="left_anti",
-                )
+                # the union allows missing columns on either side, so an
+                # updates batch that adds or drops a column evolves the
+                # table in the same commit — old rows project NULL for
+                # new columns
+                kept = self.scan(
+                    spark, [f["path"] for f in affected], base.schema_json,
+                ).join(updates.select(*keys).dropDuplicates(keys),
+                       on=keys, how="left_anti")
                 out = kept.unionByName(updates, allowMissingColumns=True)
-            out.write.option("compression", "snappy").parquet(
-                os.path.join(self.root, stage))
-            try:
-                return self.replace_files(
-                    [f["path"] for f in affected],
-                    self.staged_files(stage, stats_columns=stats_cols),
-                    expected_base=base_v,
-                    branch=branch,
-                    schema_json=out.schema.json(),
-                    properties=properties,
-                )
-            except CommitConflict as exc:
-                # stage is unreferenced — an invisible orphan, like any
-                # crash-before-commit; re-plan against the new head
-                last_exc = exc
-                continue
-        raise last_exc  # pragma: no cover - needs sustained contention
+            return Rewrite(affected, out, stats_cols, out.schema.json(),
+                           properties)
+
+        return self.rewrite(plan, branch)
 
     def delete_where(
         self,
@@ -576,7 +603,6 @@ class FsTable:
         branch: str = "main",
         stats_columns: list[str] | None = None,
         prune: list[tuple[str, str, Any]] | None = None,
-        max_replans: int = 3,
     ) -> "Snapshot | None":
         """Row-level COW DELETE (the GDPR/right-to-erasure primitive):
         remove every row matching ``condition`` (a SQL boolean over the
@@ -585,57 +611,34 @@ class FsTable:
         Scale shape, two pruning layers before any rewrite: (1)
         ``prune`` triples cut the candidate list via manifest stats
         (pass the key bounds when you know them — an erasure by id
-        range touches only files that can hold it); (2) one
-        metadata-cheap pass tags candidates by ``input_file_name`` and
-        only files actually CONTAINING a matching row are rewritten —
-        candidates that merely overlapped the stats range carry by
-        reference. Returns the new snapshot, or None when nothing
-        matched (no empty commit). Concurrency: the precise
-        :meth:`replace_files` commit + re-plan loop, same as MERGE.
+        range touches only files that can hold it); (2) one pass tags
+        the matching rows of the candidates by ``input_file_name`` and
+        only files actually CONTAINING a matching row are re-read and
+        rewritten — candidates that merely overlapped the stats range
+        carry by reference. Returns the new snapshot, or None when
+        nothing matched (no empty commit). Concurrency: the
+        :meth:`rewrite` re-plan loop, same as MERGE.
         """
-        last_exc: CommitConflict | None = None
-        for _ in range(max_replans):
-            base_v = self.current_version(branch)
-            if base_v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-            base = self.snapshot(base_v)
+        def plan(base: Snapshot) -> Rewrite | None:
             cands = self.matching_files(base, prune)
             if not cands:
                 return None
-            cand_paths = [os.path.join(self.root, f["path"])
-                          for f in cands]
-            reader = spark.read
-            if base.schema_json:
-                from pyspark.sql.types import StructType
-
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(base.schema_json)))
-            df = reader.parquet(*cand_paths).withColumn(
-                "_f", F.input_file_name())
-            hit = {r._f for r in
-                   df.filter(condition).select("_f").distinct().collect()}
-            if not hit:
+            hit = {r._f for r in self.scan(
+                spark, [f["path"] for f in cands], base.schema_json,
+            ).withColumn("_f", F.input_file_name()).filter(condition)
+                .select("_f").distinct().collect()}
+            hits = [f for f in cands
+                    if any(h.endswith(f["path"]) for h in hit)]
+            if not hits:
                 return None
-            hit_rel = [f["path"] for f in cands
-                       if any(h.endswith(f["path"]) for h in hit)]
-            keep = (df.filter(f"_f IN ({', '.join(repr(h) for h in hit)})")
-                    .filter(f"NOT ({condition})").drop("_f"))
-            stage = self.new_stage()
-            keep.write.option("compression", "snappy").parquet(
-                os.path.join(self.root, stage))
-            try:
-                return self.replace_files(
-                    hit_rel,
-                    self.staged_files(stage, stats_columns=stats_columns),
-                    expected_base=base_v,
-                    branch=branch,
-                    schema_json=base.schema_json,
-                    properties={"last_operation": "delete"},
-                )
-            except CommitConflict as exc:
-                last_exc = exc
-                continue
-        raise last_exc  # pragma: no cover - needs sustained contention
+            # SQL DELETE semantics: a row whose condition is NULL stays
+            keep = self.scan(spark, [f["path"] for f in hits],
+                             base.schema_json).filter(
+                ~F.coalesce(F.expr(condition), F.lit(False)))
+            return Rewrite(hits, keep, stats_columns,
+                           properties={"last_operation": "delete"})
+
+        return self.rewrite(plan, branch)
 
     def compact(
         self,
@@ -644,7 +647,6 @@ class FsTable:
         min_file_size_mb: float | None = None,
         branch: str = "main",
         stats_columns: list[str] | None = None,
-        max_replans: int = 3,
     ) -> Snapshot | None:
         """Bin-pack small files into target-sized ones (Iceberg
         rewrite_data_files analog). Streaming/incremental appends leave a
@@ -653,43 +655,27 @@ class FsTable:
         an optimization.
 
         Files smaller than ``min_file_size_mb`` (default: half the target)
-        are rewritten together into ``ceil(bytes/target)`` outputs; files
-        already at size carry over by reference. Data is unchanged, so the
-        commit is the same precise :meth:`replace_files` + re-plan loop as
-        MERGE — a concurrent append between plan and commit is never
-        dropped. Returns None when fewer than two files qualify (nothing
-        to gain)."""
+        are rewritten together, under the snapshot's schema, into
+        ``ceil(bytes/target)`` outputs; files already at size carry over
+        by reference. Data is unchanged, so the commit is the same
+        :meth:`rewrite` re-plan loop as MERGE — a concurrent append
+        between plan and commit is never dropped. Returns None when fewer
+        than two files qualify (nothing to gain)."""
         min_bytes = int((min_file_size_mb if min_file_size_mb is not None
                          else target_file_size_mb / 2) * 1024 * 1024)
-        last_exc: CommitConflict | None = None
-        for _ in range(max_replans):
-            base_v = self.current_version(branch)
-            if base_v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-            base = self.snapshot(base_v)
+
+        def plan(base: Snapshot) -> Rewrite | None:
             small = [f for f in base.files
                      if f.get("size_bytes", 0) < min_bytes]
             if len(small) < 2:
                 return None
             total = sum(f.get("size_bytes", 0) for f in small)
             n_out = max(1, -(-total // (target_file_size_mb * 1024 * 1024)))
-            stage = self.new_stage()
-            spark.read.parquet(*[
-                os.path.join(self.root, f["path"]) for f in small
-            ]).coalesce(int(n_out)).write.option(
-                "compression", "snappy"
-            ).parquet(os.path.join(self.root, stage))
-            try:
-                return self.replace_files(
-                    [f["path"] for f in small],
-                    self.staged_files(stage, stats_columns=stats_columns),
-                    expected_base=base_v,
-                    branch=branch,
-                )
-            except CommitConflict as exc:
-                last_exc = exc
-                continue
-        raise last_exc  # pragma: no cover - needs sustained contention
+            return Rewrite(small, self.scan(
+                spark, [f["path"] for f in small], base.schema_json,
+            ).coalesce(int(n_out)), stats_columns)
+
+        return self.rewrite(plan, branch)
 
     def vacuum(
         self,
@@ -824,6 +810,15 @@ class FsTable:
                     staged.append(entry)
         return staged
 
+    def _stage(self, df: DataFrame, stats_columns: list[str] | None
+               ) -> list[dict[str, Any]]:
+        """Write ``df`` as snappy parquet under a fresh stage dir and
+        enumerate the written files as commit entries."""
+        stage = self.new_stage()
+        df.write.option("compression", "snappy").parquet(
+            os.path.join(self.root, stage))
+        return self.staged_files(stage, stats_columns)
+
     def write_append(
         self,
         df: DataFrame,
@@ -837,11 +832,8 @@ class FsTable:
         invisible orphans only. ``operation="overwrite"`` replaces the
         table contents atomically (manifest swap, old files untouched);
         ``stats_columns`` records per-file min/max for pruned reads."""
-        stage = self.new_stage()
-        df.write.option("compression", "snappy").parquet(
-            os.path.join(self.root, stage))
         return self.add_files(
-            self.staged_files(stage, stats_columns), operation=operation,
+            self._stage(df, stats_columns), operation=operation,
             branch=branch, schema_json=df.schema.json(),
             properties=properties,
         )
@@ -853,9 +845,7 @@ class FsTable:
         pointers, newest first. Orphaned manifests (published by a writer
         that then lost the branch CAS) are excluded by construction — no
         parent pointer ever reaches them."""
-        v = self.current_version(branch)
-        if v is None:
-            raise ValueError(f"unknown branch {branch!r}")
+        v: int | None = self._version(branch)
         out: list[int] = []
         while v is not None:
             try:
@@ -902,12 +892,8 @@ class FsTable:
         carries its stats. At 100 TB this turns the classic
         ``SELECT count(*), max(ts) FROM t`` freshness probe into a
         driver-side manifest walk."""
-        if version is None:
-            v = self.current_version(branch)
-            if v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-            version = v
-        snap = self.snapshot(version)
+        snap = self.snapshot(
+            self._version(branch) if version is None else version)
         out: dict[str, Any] = {"num_rows": 0, "columns": {}}
         rows_ok = True
         col_acc: dict[str, dict[str, Any]] = {
@@ -956,44 +942,39 @@ class FsTable:
         can never be surfaced as if it were committed (one O(history)
         manifest walk, on this path only)."""
         if version is None:
-            v = self.current_version(branch)
-            if v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-        else:
-            if version not in self.history(branch):
-                raise LookupError(
-                    f"version {version} is not reachable from branch "
-                    f"{branch!r} — either it never existed or it is an "
-                    "orphaned manifest from a lost commit race"
-                )
-            v = version
-        snap = self.snapshot(v)
-        paths = [os.path.join(self.root, f["path"])
-                 for f in self.matching_files(snap, where)]
-        if not paths:
-            from pyspark.sql.types import StructType
-
-            schema = (
-                StructType.fromJson(json.loads(snap.schema_json))
-                if snap.schema_json
-                else StructType([])
+            version = self._version(branch)
+        elif version not in self.history(branch):
+            raise LookupError(
+                f"version {version} is not reachable from branch "
+                f"{branch!r} — either it never existed or it is an "
+                "orphaned manifest from a lost commit race"
             )
-            return local_df(spark, [], schema)
-        # Schema evolution: the manifest's schema (recorded at commit
-        # time) is the read schema, so files written before an added
-        # column project it as NULL and files carrying since-dropped
-        # columns simply don't surface them — Iceberg's
-        # schema-on-manifest behavior without rewriting a byte. Each
-        # SNAPSHOT keeps its own schema, so a time-travel read returns
-        # the table as it was shaped then. Tables whose snapshots
-        # predate schema tracking fall back to file inference.
-        reader = spark.read
-        if snap.schema_json:
-            from pyspark.sql.types import StructType
+        snap = self.snapshot(version)
+        return self.scan(
+            spark, [f["path"] for f in self.matching_files(snap, where)],
+            snap.schema_json)
 
-            reader = reader.schema(
-                StructType.fromJson(json.loads(snap.schema_json)))
-        return reader.parquet(*paths)
+    def scan(self, spark: SparkSession, paths: list[str],
+             schema_json: str | None) -> DataFrame:
+        """The one data-file scan: ``paths`` (relative to root) read under
+        a snapshot's recorded schema, or an empty frame of that schema
+        when there are no paths. :meth:`read`, :meth:`changes` and every
+        :meth:`rewrite` plan scan through here.
+
+        Schema evolution: the manifest's schema (recorded at commit time)
+        is the read schema, so files written before an added column
+        project it as NULL and files carrying since-dropped columns simply
+        don't surface them — Iceberg's schema-on-manifest behavior
+        without rewriting a byte. Each SNAPSHOT keeps its own schema, so
+        a time-travel read returns the table as it was shaped then.
+        Tables whose snapshots predate schema tracking
+        (``schema_json=None``) fall back to file inference."""
+        schema = (T.StructType.fromJson(json.loads(schema_json))
+                  if schema_json else None)
+        if not paths:
+            return local_df(spark, [], schema or T.StructType([]))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[os.path.join(self.root, p) for p in paths])
 
     # -- metadata tables (Iceberg's `table.snapshots` / `table.files`) ------
 
@@ -1023,8 +1004,8 @@ class FsTable:
         metadata-table analog: (path, size_bytes, stats_json). Feeds
         small-file analysis (what would compaction do?) and audit queries
         without any data-file I/O."""
-        v = self.current_version(branch) if version is None else version
-        snap = self.snapshot(v)
+        snap = self.snapshot(
+            self._version(branch) if version is None else version)
         rows = [(f["path"], int(f.get("size_bytes", 0)),
                  json.dumps(f.get("stats"), sort_keys=True)
                  if f.get("stats") is not None else None)
@@ -1052,24 +1033,18 @@ class FsTable:
         after the audit began raises :class:`CommitConflict` instead of
         being silently clobbered — re-run the audit against the new head.
         """
-        src_v = self.current_version(from_branch)
-        if src_v is None:
-            raise ValueError(f"unknown branch {from_branch!r}")
-        src = self.snapshot(src_v)
-        base_v = (self.current_version(to_branch)
-                  if expected_base is None else expected_base)
-        if base_v is None:
-            raise ValueError(f"unknown branch {to_branch!r}")
-        base = self.snapshot(base_v)
+        src = self.snapshot(self._version(from_branch))
+        base = self.snapshot(self._version(to_branch)
+                             if expected_base is None else expected_base)
         return self.replace_files(
             [f["path"] for f in base.files],
             src.files,
-            expected_base=base_v,
+            expected_base=base.version,
             branch=to_branch,
             schema_json=src.schema_json,
             properties={**src.properties,
                         **(properties or {}),
-                        "published_from": f"{from_branch}@{src_v}"},
+                        "published_from": f"{from_branch}@{src.version}"},
         )
 
     def changes(
@@ -1117,28 +1092,13 @@ class FsTable:
         removed = sorted(paths_a - paths_b)
         added = sorted(paths_b - paths_a)
 
-        def _scan(paths: list[str]) -> DataFrame:
-            # both sides scan under the TO snapshot's schema (falling
-            # back to the FROM side's), so a diff across a schema
-            # evolution stays column-aligned for the EXCEPT ALL:
-            # preimages project added columns as NULL, exactly how a
-            # head read shows those rows
-            from pyspark.sql.types import StructType
-
-            schema_json = b.schema_json or a.schema_json
-            if paths:
-                reader = spark.read
-                if schema_json:
-                    reader = reader.schema(
-                        StructType.fromJson(json.loads(schema_json)))
-                return reader.parquet(
-                    *[os.path.join(self.root, p) for p in paths])
-            schema = (StructType.fromJson(json.loads(schema_json))
-                      if schema_json else StructType([]))
-            return local_df(spark, [], schema)
-
-        new_rows = _scan(added)
-        old_rows = _scan(removed)
+        # both sides scan under the TO snapshot's schema (falling back to
+        # the FROM side's), so a diff across a schema evolution stays
+        # column-aligned for the EXCEPT ALL: preimages project added
+        # columns as NULL, exactly how a head read shows those rows
+        schema_json = b.schema_json or a.schema_json
+        new_rows = self.scan(spark, added, schema_json)
+        old_rows = self.scan(spark, removed, schema_json)
         inserts = new_rows.exceptAll(old_rows)
         deletes = old_rows.exceptAll(new_rows)
         return (inserts.withColumn("_change_type", F.lit("insert"))
@@ -1184,9 +1144,7 @@ class FsTable:
 
         if audit_branch is None:
             audit_branch = f"audit-{uuid.uuid4().hex[:8]}"
-        base_v = self.current_version(to_branch)
-        if base_v is None:
-            raise ValueError(f"unknown branch {to_branch!r}")
+        base_v = self._version(to_branch)
         self.create_branch(audit_branch, at_version=base_v)
         self.write_append(df, branch=audit_branch,
                           stats_columns=stats_columns)
@@ -1205,30 +1163,24 @@ class FsTable:
         cols: dict[str, tuple[float, float]],
         n_files: int = 8,
         branch: str = "main",
-        max_replans: int = 3,
     ) -> "Snapshot | None":
         """Rewrite the table clustered along the Z-curve of ``cols``
         (Iceberg's rewrite_data_files with a sort order): one
-        range-repartition pass, then the same precise
-        :meth:`replace_files` + re-plan loop as compact/MERGE — a
-        concurrent append landing between the read and the commit raises
-        CommitConflict and the rewrite re-plans from the new head, so
-        its rows are never dropped. Per-file min/max land in the
-        manifest for the curve columns PLUS every column the previous
-        snapshot carried stats for (a partition-predicate read must not
-        stop pruning because of a layout rewrite). Old files stay until
-        vacuum. None when the table is empty."""
+        range-repartition pass, committed through the same
+        :meth:`rewrite` re-plan loop as compact/MERGE — a concurrent
+        append landing between the read and the commit is never dropped.
+        Per-file min/max land in the manifest for the curve columns PLUS
+        every column the previous snapshot carried stats for (a
+        partition-predicate read must not stop pruning because of a
+        layout rewrite). Old files stay until vacuum. None when the table
+        is empty."""
         from dativo_ingest_spark.operators import layout
 
-        last_exc: CommitConflict | None = None
-        for _ in range(max_replans):
-            base_v = self.current_version(branch)
-            if base_v is None:
-                raise ValueError(f"unknown branch {branch!r}")
-            base = self.snapshot(base_v)
+        def plan(base: Snapshot) -> Rewrite | None:
             if not base.files:
                 return None
-            df = self.read(spark, version=base_v, branch=branch)
+            df = self.scan(spark, [f["path"] for f in base.files],
+                           base.schema_json)
             # validate against the actual read schema (covers snapshots
             # committed without schema_json too) so the CLI maps a bad
             # column to exit 2 instead of an AnalysisException mid-rewrite
@@ -1239,19 +1191,8 @@ class FsTable:
             stats_cols = sorted(
                 set(cols) | {k for f in base.files
                              for k in (f.get("stats") or {})})
-            clustered = layout.zorder_by(df, cols, n_files).drop("_zkey")
-            stage = self.new_stage()
-            clustered.write.option("compression", "snappy").parquet(
-                os.path.join(self.root, stage))
-            try:
-                return self.replace_files(
-                    [f["path"] for f in base.files],
-                    self.staged_files(stage, stats_columns=stats_cols),
-                    expected_base=base_v,
-                    branch=branch,
-                    schema_json=base.schema_json,
-                )
-            except CommitConflict as exc:
-                last_exc = exc
-                continue
-        raise last_exc  # pragma: no cover - needs sustained contention
+            return Rewrite(base.files,
+                           layout.zorder_by(df, cols, n_files).drop("_zkey"),
+                           stats_cols)
+
+        return self.rewrite(plan, branch)

@@ -274,38 +274,43 @@ def test_merge_upsert_leaves_nonmatching_files_untouched(spark, tmp_path):
     assert got[105] == "new" and got[0] == "old" and len(got) == 20
 
 
-def test_merge_upsert_replans_past_concurrent_append(spark, tmp_path):
-    from dativo_ingest_spark.sinks import table_commit as tc
-
+@pytest.mark.parametrize("op", ["merge_upsert", "delete_where", "compact"])
+def test_rewrite_replans_past_concurrent_append(spark, tmp_path, monkeypatch,
+                                                op):
     t = FsTable.create(str(tmp_path / "t"))
-    t.write_append(spark.createDataFrame(
-        [(1, "a")], "id long, val string"), stats_columns=["id"])
+    for row in ((1, "a"), (2, "b")):
+        t.write_append(spark.createDataFrame(
+            [row], "id long, val string").coalesce(1), stats_columns=["id"])
 
-    # a writer appends between merge planning and commit: patch
-    # replace_files to inject the race exactly once
+    # a writer appends between the rewrite's planning and its commit:
+    # patch replace_files to inject the race exactly once
     orig = FsTable.replace_files
-    raced = {"done": False}
+    calls = []
 
     def with_race(self, *args, **kwargs):
-        if not raced["done"]:
-            raced["done"] = True
-            t2 = FsTable(self.root)
-            t2.write_append(spark.createDataFrame(
+        if not calls:
+            FsTable(self.root).write_append(spark.createDataFrame(
                 [(50, "concurrent")], "id long, val string"),
                 stats_columns=["id"])
+        calls.append(kwargs["expected_base"])
         return orig(self, *args, **kwargs)
 
-    FsTable.replace_files = with_race
-    try:
-        t.merge_upsert(
-            spark,
-            spark.createDataFrame([(1, "A")], "id long, val string"),
-            keys=["id"])
-    finally:
-        FsTable.replace_files = orig
+    monkeypatch.setattr(FsTable, "replace_files", with_race)
+    run, expected = {
+        "merge_upsert": (lambda: t.merge_upsert(
+            spark, spark.createDataFrame([(1, "A")], "id long, val string"),
+            keys=["id"]), {1: "A", 2: "b", 50: "concurrent"}),
+        "delete_where": (lambda: t.delete_where(spark, "id = 2"),
+                         {1: "a", 50: "concurrent"}),
+        "compact": (lambda: t.compact(spark),
+                    {1: "a", 2: "b", 50: "concurrent"}),
+    }[op]
+    snap = run()
+    # the first commit was refused and the op re-planned on the new head
+    assert calls == [2, 3] and snap.parent == 3
     got = {r.id: r.val for r in t.read(spark).collect()}
-    # the concurrent append survived AND the merge applied
-    assert got == {1: "A", 50: "concurrent"}
+    # the concurrent append survived AND the rewrite applied
+    assert got == expected
 
 
 def test_replace_files_refuses_stale_base(spark, tmp_path):
@@ -314,6 +319,22 @@ def test_replace_files_refuses_stale_base(spark, tmp_path):
     t.write_append(spark.createDataFrame([(2, "b")], "id long, val string"))
     with pytest.raises(CommitConflict):
         t.replace_files([], [], expected_base=s1.version)
+
+
+def test_compact_keeps_a_column_added_after_the_first_file(spark, tmp_path):
+    """compact() rewrites under the snapshot's schema: rows of files
+    written after a column was added keep that column's values."""
+    t = FsTable.create(str(tmp_path / "t"))
+    t.write_append(spark.createDataFrame(
+        [(i,) for i in range(3)], "id long").coalesce(1))
+    for lo in (10, 20):
+        t.write_append(spark.createDataFrame(
+            [(lo + i, f"x{lo + i}") for i in range(3)],
+            "id long, extra string").coalesce(1))
+    assert t.compact(spark) is not None
+    got = {r.id: r.extra for r in t.read(spark).collect()}
+    assert got == {0: None, 1: None, 2: None,
+                   **{i: f"x{i}" for i in (10, 11, 12, 20, 21, 22)}}
 
 
 def test_compact_binpacks_small_files(spark, tmp_path):
@@ -644,6 +665,18 @@ class TestDeleteWhere:
         v = t.current_version()
         assert t.delete_where(spark, "k = 999") is None
         assert t.current_version() == v
+
+    def test_rows_where_the_condition_is_null_are_kept(self, spark,
+                                                       tmp_path):
+        """SQL DELETE removes only rows whose condition is TRUE: a NULL
+        in the rewritten file must not be dropped with the match."""
+        t = FsTable.create(str(tmp_path / "t"))
+        t.write_append(spark.createDataFrame(
+            [(1, "a"), (2, None), (3, "c")], "k long, val string")
+            .coalesce(1))
+        assert t.delete_where(spark, "val = 'c'") is not None
+        got = sorted((r.k, r.val) for r in t.read(spark).collect())
+        assert got == [(1, "a"), (2, None)]
 
     def test_delete_surfaces_in_change_feed(self, spark, tmp_path):
         t = FsTable.create(str(tmp_path / "t"))
