@@ -517,7 +517,10 @@ class FsTable:
         so a concurrent append is never dropped and never rewritten
         twice. A lost attempt's stage is unreferenced — an invisible
         orphan, like any crash-before-commit, reclaimed by
-        :meth:`vacuum`."""
+        :meth:`vacuum`. Staged files with no rows are left out of the
+        commit (a plan whose frame comes out empty, e.g. a delete of
+        every row, commits the removal alone); the snapshot's schema
+        still shapes an empty read."""
         for attempt in range(_MAX_REPLANS):
             base = self.snapshot(self._version(branch))
             planned = plan(base)
@@ -526,7 +529,8 @@ class FsTable:
             staged = self._stage(planned.frame, planned.stats_columns)
             try:
                 return self.replace_files(
-                    [f["path"] for f in planned.remove], staged,
+                    [f["path"] for f in planned.remove],
+                    [f for f in staged if f["num_rows"]],
                     expected_base=base.version, branch=branch,
                     schema_json=planned.schema_json,
                     properties=planned.properties,

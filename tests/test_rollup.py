@@ -259,6 +259,30 @@ class TestRollupTargetMode:
         assert _next_job_id(spark) == before
         assert not list((tmp_path / "tbl").rglob("*.parquet"))
 
+    def test_batch_is_released_when_the_commit_raises(self, spark, tmp_path,
+                                                      monkeypatch):
+        """The persisted (watermark-filtered) batch is released on every
+        exit path: a raising fold-and-commit leaves no cache behind."""
+        import pytest as _pytest
+
+        from dativo_ingest_spark import runner
+        from dativo_ingest_spark.config.contracts import JobConfig
+
+        def boom(*_a, **_k):
+            raise RuntimeError("commit failed")
+
+        monkeypatch.setattr(rollup, "commit_rollup", boom)
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        src = str(tmp_path / "src")
+        _frame(spark).withColumn("cursor", F.col("id")).write.parquet(src)
+        cfg = self._cfg(src, str(tmp_path / "tbl"), incremental={
+            "enabled": True, "cursor_field": "cursor"})
+        with _pytest.raises(RuntimeError, match="commit failed"):
+            runner.run_job(spark, JobConfig.from_dict(cfg),
+                           state_root=str(tmp_path / "state"))
+        assert cache.isEmpty()
+
     def test_mode_commit_mismatch_is_config_error(self, spark, tmp_path):
         import pytest as _pytest
 

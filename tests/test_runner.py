@@ -559,13 +559,12 @@ def test_table_commit_scd2_mode_requires_config(spark, tmp_path):
 
 def test_iceberg_commit_requires_catalog_config(spark, csv_file, tmp_path):
     """commit=iceberg without a registered catalog fails at config time
-    (exit-2 class error, before any data is staged) and names the conf."""
+    (exit-2 class error, before any Spark job) and names the conf."""
     d = job_dict(csv_file, str(tmp_path / "out"))
     d["target"]["table"] = "lakehouse.db.people"
     d["target"]["options"]["commit"] = "iceberg"
-    job = JobConfig.from_dict(d)
-    with pytest.raises(ConfigError, match="spark.sql.catalog.lakehouse"):
-        runner.run_job(spark, job)
+    _raises_before_any_data(spark, d, tmp_path / "out",
+                            "spark.sql.catalog.lakehouse")
     # nothing staged, nothing published
     assert not (tmp_path / "out").exists()
 
@@ -574,8 +573,14 @@ def test_iceberg_commit_requires_three_part_table(spark, csv_file, tmp_path):
     d = job_dict(csv_file, str(tmp_path / "out"))
     d["target"]["table"] = "people"  # no catalog.db prefix
     d["target"]["options"]["commit"] = "iceberg"
-    with pytest.raises(ConfigError, match="catalog.db.table"):
-        runner.run_job(spark, JobConfig.from_dict(d))
+    _raises_before_any_data(spark, d, tmp_path / "out", "catalog.db.table")
+
+
+def test_zorder_requires_columns(spark, csv_file, tmp_path):
+    d = job_dict(csv_file, str(tmp_path / "out"))
+    d["target"]["options"]["zorder"] = {"columns": {}, "files": 2}
+    _raises_before_any_data(spark, d, tmp_path / "out",
+                            "zorder needs columns")
 
 
 def test_iceberg_commit_path_selected_with_mocked_catalog(

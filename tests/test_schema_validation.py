@@ -241,3 +241,162 @@ def test_shipped_examples_validate():
             continue
         job = JobConfig.from_yaml(p, validate_schema=True)
         assert job.asset.fields, p
+
+
+# --- schema parity for the runner's startup checks --------------------------
+
+_ROLLUP = {"keys": ["email"], "measures": {"n": ["count", "id"]}}
+_SCD2 = {"keys": ["id"], "tracked": ["email"], "ts_field": "updated_at"}
+_SHARD = {"id_field": "id", "token_field": "id"}
+_DEDUP = {"index": "/ix", "id_field": "id", "content_field": "email"}
+_DRIFT = {"column": "id", "reference_path": "/ref"}
+
+
+def _no_cursor(doc):
+    doc["source"]["incremental"] = {"enabled": False}
+
+
+def _no_partitions(doc):
+    doc["target"]["partition_by"] = []
+
+
+def _table(name):
+    def edit(doc):
+        doc["target"]["table"] = name
+    return edit
+
+
+def _shard(**extra):
+    return {"mode": "shard_export", "shard": {**_SHARD, **extra}}
+
+
+def _mixture(**mixture):
+    return _shard(mixture=mixture)
+
+
+#: (case, target.options, an edit of the rest of the doc, ConfigError match)
+#: — one entry per ConfigError that runner.TargetPlan.from_job raises
+PLAN_ERRORS = [
+    ("commit_unknown", {"commit": "bogus"}, None, "commit must be"),
+    ("mode_unknown", {"mode": "upsert"}, None, "mode must be one of"),
+    ("merge_on_hive", {"mode": "merge", "merge_keys": "id"}, None,
+     "commit: table"),
+    ("merge_without_keys", {"mode": "merge", "commit": "table"}, None,
+     "merge_keys"),
+    ("merge_keys_blank",
+     {"mode": "merge", "commit": "table", "merge_keys": ""}, None,
+     "merge_keys"),
+    ("rollup_on_hive", {"mode": "rollup", "rollup": _ROLLUP}, None,
+     "commit: table"),
+    ("rollup_without_spec", {"mode": "rollup", "commit": "table"}, None,
+     "rollup.keys"),
+    ("rollup_without_keys",
+     {"mode": "rollup", "commit": "table",
+      "rollup": {**_ROLLUP, "keys": []}}, None, "rollup.keys"),
+    ("rollup_without_cursor",
+     {"mode": "rollup", "commit": "table", "rollup": _ROLLUP}, _no_cursor,
+     "cursor"),
+    ("scd2_on_iceberg", {"mode": "scd2", "commit": "iceberg",
+                         "scd2": _SCD2}, _table("lake.db.t"),
+     "commit: table"),
+    ("scd2_without_tracked",
+     {"mode": "scd2", "commit": "table",
+      "scd2": {"keys": ["id"], "ts_field": "updated_at"}}, None,
+     "scd2.tracked"),
+    ("scd2_ts_field_in_keys",
+     {"mode": "scd2", "commit": "table", "scd2": {**_SCD2,
+                                                  "ts_field": "id"}},
+     None, "ts_field must not"),
+    ("overwrite_partitions_on_table",
+     {"mode": "overwrite_partitions", "commit": "table"}, None,
+     "hive-publish"),
+    ("shard_export_on_table", {**_shard(), "commit": "table"},
+     _no_partitions, "shard=K"),
+    ("shard_without_token_field",
+     {"mode": "shard_export", "shard": {"id_field": "id"}}, _no_partitions,
+     "token_field"),
+    ("shard_with_partition_by", _shard(), None, "partition_by must be"),
+    ("shard_format", _shard(format="csv"), _no_partitions,
+     "parquet or jsonl"),
+    ("mixture_without_domain", _mixture(total_budget=5), _no_partitions,
+     "domain_field"),
+    ("mixture_without_budget", _mixture(domain_field="d", total_budget=0),
+     _no_partitions, "total_budget"),
+    ("mixture_negative_rounds",
+     _mixture(domain_field="d", total_budget=5, n_rounds=-1),
+     _no_partitions, "n_rounds"),
+    ("dedup_without_index",
+     {"dedup": {"id_field": "id", "content_field": "email"}}, None,
+     "needs index"),
+    ("dedup_mode", {"dedup": {**_DEDUP, "mode": "fuzzy"}}, None,
+     "dedup.mode"),
+    ("dedup_threshold",
+     {"dedup": {**_DEDUP, "mode": "minhash", "threshold": 1.5}}, None,
+     "threshold"),
+    ("dedup_rows_per_band",
+     {"dedup": {**_DEDUP, "mode": "minhash", "num_hashes": 10,
+                "rows_per_band": 3}}, None, "rows_per_band"),
+    ("dedup_codec_without_embedding",
+     {"dedup": {**_DEDUP, "index_codec": "pq", "codebooks": "/cb"}}, None,
+     "applies only"),
+    ("dedup_with_overwrite", {"mode": "overwrite", "dedup": _DEDUP}, None,
+     "cannot combine"),
+    ("dedup_id_not_required",
+     {"dedup": {**_DEDUP, "id_field": "email"}}, None, "REQUIRED"),
+    ("drift_without_reference", {"drift_gate": {"column": "id"}}, None,
+     "reference_path"),
+    ("drift_on_drift", {"drift_gate": {**_DRIFT, "on_drift": "explode"}},
+     None, "on_drift"),
+    ("drift_bins", {"drift_gate": {**_DRIFT, "n_bins": 1}}, None,
+     "n_bins"),
+    ("drift_threshold", {"drift_gate": {**_DRIFT, "threshold_milli": 0}},
+     None, "threshold_milli"),
+    ("drift_method", {"drift_gate": {**_DRIFT, "method": "kl"}}, None,
+     "method"),
+    ("zorder_without_columns", {"zorder": {"columns": {}}}, None,
+     "zorder needs columns"),
+    ("iceberg_two_part_table", {"commit": "iceberg"}, _table("db.t"),
+     "catalog.db.table"),
+    ("iceberg_without_catalog", {"commit": "iceberg"},
+     _table("nocat.db.t"), "spark.sql.catalog.nocat"),
+]
+
+#: checks that span fields (or the Spark session) which the JSON schema
+#: does not express: only TargetPlan enforces these
+CROSS_FIELD = {
+    "merge_on_hive", "merge_without_keys", "rollup_on_hive",
+    "rollup_without_spec", "rollup_without_cursor", "scd2_on_iceberg",
+    "scd2_ts_field_in_keys", "overwrite_partitions_on_table",
+    "shard_export_on_table", "shard_with_partition_by",
+    "dedup_rows_per_band", "dedup_codec_without_embedding",
+    "dedup_with_overwrite", "dedup_id_not_required",
+    "iceberg_two_part_table", "iceberg_without_catalog",
+}
+
+
+@pytest.mark.parametrize("case, options, edit, match", PLAN_ERRORS,
+                         ids=[c[0] for c in PLAN_ERRORS])
+def test_target_plan_errors_match_the_schema(spark, case, options, edit,
+                                             match):
+    """Every startup ConfigError of the runner's target plan raises before
+    any Spark job, and is either rejected by the opt-in schema too or
+    named in CROSS_FIELD (never both: a cross-field case the schema
+    learns to reject leaves the list)."""
+    import copy
+
+    from tests.test_widen import _next_job_id
+
+    doc = copy.deepcopy(VALID)
+    doc["target"]["options"] = options
+    if edit is not None:
+        edit(doc)
+    before = _next_job_id(spark)
+    with pytest.raises(ConfigError, match=match):
+        runner.TargetPlan.from_job(JobConfig.from_dict(doc), spark)
+    assert _next_job_id(spark) == before
+    try:
+        schema_validation.validate_job_dict(doc)
+        rejected = False
+    except ConfigError:
+        rejected = True
+    assert rejected != (case in CROSS_FIELD)

@@ -678,6 +678,29 @@ class TestDeleteWhere:
         got = sorted((r.k, r.val) for r in t.read(spark).collect())
         assert got == [(1, "a"), (2, None)]
 
+    def test_emptied_file_is_not_committed(self, spark, tmp_path):
+        """A rewrite whose frame comes out empty commits the removal
+        alone: no 0-row file stays live for every later scan to open."""
+        t = FsTable.create(str(tmp_path / "t"))
+        for k in (1, 2):
+            t.write_append(spark.createDataFrame(
+                [(k, "x")], "id long, val string").coalesce(1))
+        assert t.delete_where(spark, "id = 2") is not None
+        live = t.snapshot(t.current_version()).files
+        assert sorted(f["num_rows"] for f in live) == [1]
+        assert [r.id for r in t.read(spark).collect()] == [1]
+
+    def test_deleting_every_row_leaves_an_empty_table(self, spark,
+                                                      tmp_path):
+        t = FsTable.create(str(tmp_path / "t"))
+        t.write_append(spark.createDataFrame(
+            [(1, "a"), (2, "b")], "id long, val string").coalesce(1))
+        assert t.delete_where(spark, "id > 0") is not None
+        assert t.snapshot(t.current_version()).files == []
+        empty = t.read(spark)
+        assert empty.count() == 0
+        assert empty.columns == ["id", "val"]
+
     def test_delete_surfaces_in_change_feed(self, spark, tmp_path):
         t = FsTable.create(str(tmp_path / "t"))
         t.write_append(spark.createDataFrame(
